@@ -323,34 +323,14 @@ object Bench {
         * ~118 queries of block-manager state in one JVM and the builder
         * measured 2× distortion on scale10 from exactly this pressure —
         * the scale10/stores stages defend themselves with unpersist
-        * barriers, the main loop had none. Dropping the blocks requires
-        * forgetting the memos they back (truncated-lineage checkpoints
-        * cannot recompute; ArgoQueries' persisted frames CAN, but a memo
-        * serving an unpersisted frame makes every consumer re-derive it,
-        * so the maps are cleared and the next consumer re-persists).
-        * Each memo's rebuild lands in its next consumer's rep 1; the
-        * published min-of-reps keeps the warm rep, so per-query walls
-        * are unchanged — only the suite wall pays. */
+        * barriers, the main loop had none. [[SessionMemo.reset]] drops
+        * the blocks and the memos they back; each memo's rebuild lands in
+        * its next consumer's rep 1; the published min-of-reps keeps the
+        * warm rep, so per-query walls are unchanged — only the suite wall
+        * pays. The disk-backed q129 layout stays warm. */
       def stateBarrier(): Unit = {
         val before = storageMB()
-        // blocking so the "after" readback below sees the drop
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        graft.queries.TextQueries.invalidateSessionMemos(spark)
-        graft.queries.EmbeddingQueries.invalidateSessionMemos(spark)
-        graft.queries.KernelQueries.invalidateSessionMemos(spark)
-        graft.queries.GeoQueries.invalidateSessionMemos(spark)
-        // checkpoint-backed ONLY: the q129 layout memo is disk-backed
-        // and survives the unpersist — dropping it here would bill the
-        // next rep a full rewrite the barrier did not make necessary
-        graft.queries.RelationalQueries.releaseCheckpointMemos(spark)
-        graft.queries.ArgoQueries.releaseSessionFrames(spark)
-        // cached-plan entries would otherwise survive their dropped
-        // buffers and shadow the memos' re-persists; the gc lets the
-        // ContextCleaner reap the ~40 queries of now-unreferenced
-        // broadcast blocks, which unpersist cannot touch
-        spark.sharedState.cacheManager.clearCache()
-        System.gc()
+        graft.queries.SessionMemo.reset(spark)
         // the status store is fed by an ASYNC listener bus — without the
         // settle pause the readback reports the pre-barrier number (r10
         // first run logged "now 144 MB" for a barrier that had freed
@@ -696,20 +676,8 @@ object Bench {
         // after the full suite vs 9.1 s isolated). Safe here: this stage
         // reads only the scale10 dir (its memos build fresh), and the
         // LATER stores stage — which does revisit sfDir — runs its own
-        // unpersist + invalidate first, by design, not by trusting this
-        // one to have run.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        // the unpersist above destroyed any memoized localCheckpoint's
-        // blocks, and truncated lineage cannot recompute — the memos must
-        // forget them or they would serve dead frames to any later consumer
-        graft.queries.TextQueries.invalidateSessionMemos(spark)
-        graft.queries.EmbeddingQueries.invalidateSessionMemos(spark)
-        graft.queries.KernelQueries.invalidateSessionMemos(spark)
-        graft.queries.GeoQueries.invalidateSessionMemos(spark)
-        graft.queries.RelationalQueries.releaseCheckpointMemos(spark)
-        graft.queries.ArgoQueries.releaseSessionFrames(spark)
-        System.gc()
+        // reset first, by design, not by trusting this one to have run.
+        graft.queries.SessionMemo.reset(spark)
         val tb = System.nanoTime()
         val dir = buildScale10(spark, sfDir)
         System.err.println(f"[bench] scale10 build           ${(System.nanoTime() - tb) / 1e9}%8.2f s")
@@ -956,26 +924,17 @@ object Bench {
         // an at-rest store amortizes away, and the warm main-loop numbers
         // structurally EXCLUDE it (min-of-reps keeps the rep where the
         // memo is already built). Cold state is forced the scale10 way
-        // (drop the suite's blocks, invalidate the checkpoint memos they
-        // backed, collect), and the cold runs go FIRST so the store
-        // build's own leftover state never pollutes them.
+        // (SessionMemo.reset) plus the q129 layout dirs, and the cold runs
+        // go FIRST so the store build's own leftover state never pollutes
+        // them.
         // min-of-reps like every other published number (a single cold
         // sample carries the full host-burst exposure the 0.4 s re-run
         // threshold exists for — one inflated sample would overstate the
-        // advertised cold-to-store win). Each rep re-forces cold state:
-        // dropping the blocks + invalidating the checkpoint memos they
-        // backed makes the next run rebuild from the scan, so rep 2 is a
-        // genuine second COLD measurement, not a warm one.
+        // advertised cold-to-store win). Each rep re-forces cold state, so
+        // rep 2 is a genuine second COLD measurement, not a warm one.
         def forceCold(): Unit = {
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          graft.queries.TextQueries.invalidateSessionMemos(spark)
-          graft.queries.EmbeddingQueries.invalidateSessionMemos(spark)
-          graft.queries.KernelQueries.invalidateSessionMemos(spark)
-          graft.queries.GeoQueries.invalidateSessionMemos(spark)
-          graft.queries.RelationalQueries.invalidateSessionMemos(spark)
-          graft.queries.ArgoQueries.releaseSessionFrames(spark)
-          System.gc()
+          graft.queries.SessionMemo.reset(spark)
+          graft.queries.RelationalQueries.reclaimLayoutDirs()
         }
         // q78 joins the pair in round 10: the PQ sidecar landed in r9 with
         // spec parity but no measured seconds — this publishes the cold
@@ -1182,11 +1141,8 @@ object Bench {
           }
           // the q97 twin: TermStore postings scan vs the per-session
           // forward-index rebuild (tokenize → doc_id shuffle →
-          // checkpoint). Cold state is forced before EVERY rebuild rep —
-          // a bare memo invalidate would both time a memo hit on rep 2
-          // AND orphan rep 1's checkpoint blocks in the block manager
-          // (SessionMemo's documented hazard): forceCold pairs the
-          // unpersist with the invalidate.
+          // checkpoint). Cold state is forced before EVERY rebuild rep,
+          // or rep 2 would time a memo hit.
           val splitQ97 = try {
             val tScan = minRep(
               graft.sources.TermStore.loadBucketed(spark, "bench_termstore")

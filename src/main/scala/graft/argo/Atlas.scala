@@ -502,7 +502,7 @@ object Atlas {
     * `new` would defeat even object-identity plan comparison. (Note this
     * alone does NOT make fresh aggTS builds `sameResult`: the buffer
     * encoder is re-resolved per analysis with fresh LambdaVariable ids —
-    * see ArgoQueries.climPeek — so CacheManager reuse of memoized atlas
+    * see ArgoQueries.climCache — so CacheManager reuse of memoized atlas
     * frames works through the shared DataFrame object, never through
     * plan substitution.) Sharing is safe: the aggregator is stateless
     * (all state lives in the passed-in buffer) and is serialized per

@@ -178,7 +178,8 @@ object Graph {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    es.collect().foreach { row =>
+    // bind src/dst BY NAME, as driverPageRank does
+    es.select(col("src"), col("dst")).collect().foreach { row =>
       val a = row.getLong(0); val b = row.getLong(1)
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)

@@ -22,61 +22,8 @@ object ArgoQueries extends QueryModule {
   private[graft] def samplesProbe(summary: DataFrame): DataFrame = samples(summary)
   private[graft] def profilesProbe(s: SparkSession, d: String): DataFrame = pipeline(s, d)
 
-  /** Per-(session, dir) memoizer for persisted frames. Values are STRONG
-    * references, deliberately: the memo handle is the ONLY handle to the
-    * persisted frame, and a rebuilt plan is NOT guaranteed to find the
-    * existing InMemoryRelation — UDAF-bearing plans are never `sameResult`
-    * across builds (fresh LambdaVariable ids per analysis, see
-    * [[climPeek]]) — so a weak value that GC cleared between two queries
-    * would make the rebuild register a SECOND copy of the cells while the
-    * orphaned first copy (reachable only through the CacheManager) could
-    * never be unpersisted again. The price of strength is that a value
-    * reaches its session, so the WeakHashMap's key-weakness never fires —
-    * and a pinned STOPPED session is not "one small handle", it is the
-    * whole SparkContext + plan graph + InMemoryRelation objects. [[memo]]
-    * therefore evicts stopped sessions' entries on every touch, so a
-    * process that cycles sessions (service, notebook, test harness) is
-    * bounded at live sessions plus at most the stopped ones created since
-    * the last memoized query. */
-  private type FrameCache =
-    java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]
-
-  private def memo(cache: FrameCache, s: SparkSession, d: String)
-                  (build: => DataFrame): DataFrame = {
-    val perSession = cache.synchronized {
-      val it = cache.entrySet().iterator()
-      while (it.hasNext) {
-        val k = it.next().getKey
-        if (k != null && k.sparkContext.isStopped) it.remove()
-      }
-      cache.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-    }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(d, build)
-    }
-  }
-
-  /** Unpersist and forget this session's memoized argo frames (summary,
-    * interpolated pipeline, export cells). Unlike the checkpoint memos,
-    * these are plain persist()s with intact lineage — but a caller that
-    * unpersists the session's blocks wholesale (Bench's barriers) MUST
-    * also clear the maps: a memo serving an unpersisted frame makes
-    * every later consumer re-derive the whole subtree per reference
-    * instead of re-persisting it once. */
-  private[graft] def releaseSessionFrames(s: SparkSession): Unit =
-    Seq(summaryCache, interpCache, cellCache, climCache).foreach { cache =>
-      val per = cache.synchronized(Option(cache.get(s)))
-      per.foreach { m =>
-        m.synchronized {
-          m.values.foreach(_.unpersist(false))
-          m.clear()
-        }
-      }
-    }
-
   /** One persisted summary per (session, dir). */
-  private val summaryCache = new FrameCache
+  private val summaryCache = new SessionMemo[DataFrame]
 
   /** Stage-2 profiles over the MEMOIZED stage-1 summary. The summary is
     * persisted and shared: within one query both the sample generator and
@@ -87,7 +34,7 @@ object ArgoQueries extends QueryModule {
     * (toctools.py:72-83). Memoizing bounds the cached footprint to one
     * ~1 MB frame per (session, scale dir) instead of one per invocation. */
   private def pipeline(s: SparkSession, d: String): DataFrame = {
-    val summary = memo(summaryCache, s, d)(
+    val summary = summaryCache.getOrElseUpdate(s, d)(
       SummaryBuilder.build(s, rawHeader(s, d)).persist())
     // Repartition the ~30 B header rows BEFORE the generator fans each out
     // to ~4 KB of sample arrays: the kernel stage still gets its pinned
@@ -118,10 +65,11 @@ object ArgoQueries extends QueryModule {
     * whose root no plan ever builds independently — the atlas family gets
     * it via this method and hits the cache; q70's bare pipeline plan has
     * no matching subtree and always recomputes. PlanSpec pins this. */
-  private val interpCache = new FrameCache
+  private val interpCache = new SessionMemo[DataFrame]
 
   private def pipelineCached(s: SparkSession, d: String): DataFrame =
-    memo(interpCache, s, d)(pipeline(s, d).filter(lit(true)).persist())
+    interpCache.getOrElseUpdate(s, d)(
+      pipeline(s, d).filter(lit(true)).persist())
 
   /** THE atlas parameterization of the q71/q76 export family — one
     * definition so the memo key below can be the dir alone (a per-atlas
@@ -148,22 +96,12 @@ object ArgoQueries extends QueryModule {
     * registered queries the way the reference's stored atlas feeds its
     * exports; the frames are fixed-point partition-invariant, so every
     * consumer sees bit-identical cells. */
-  private val cellCache = new FrameCache
-  private val climCache = new FrameCache
+  private val cellCache = new SessionMemo[DataFrame]
 
-  private def tsCellsCached(s: SparkSession, d: String): DataFrame =
-    memo(cellCache, s, d)(
-      graft.argo.Atlas.aggTS(ExportAtlas.pairs(s, pipelineCached(s, d)))
-        .filter(lit(true)).persist())
-
-  private def climTSCached(s: SparkSession, d: String): DataFrame =
-    memo(climCache, s, d)(
-      ExportAtlas.finalizeTS(tsCellsCached(s, d)).filter(lit(true)).persist())
-
-  /** Read-only view of the memo for the PlanSpec guard: returns the
-    * registered frame or None, NEVER builds — so a test can only see a
-    * persisted frame that a q76 run actually registered, not one the
-    * probe itself created (the vacuity the old `climProbe` had).
+  /** The finalized export cells. The PlanSpec guard reads this memo with
+    * `peek`, which never builds — so a test can only see a persisted
+    * frame that a q76 run actually registered, not one the probe itself
+    * created.
     *
     * Why not assert cache substitution on a fresh `climTS` build instead:
     * it can never happen. `ScalaAggregator`'s buffer encoder is
@@ -172,9 +110,16 @@ object ArgoQueries extends QueryModule {
     * so two builds of any UDAF-bearing plan are never `sameResult` — the
     * memoized OBJECT is the only handle to the cached cells (which is
     * also why q71/q74 structurally cannot be served stale cells). */
-  private[graft] def climPeek(s: SparkSession, d: String): Option[DataFrame] =
-    climCache.synchronized(Option(climCache.get(s))).flatMap(m =>
-      m.synchronized(m.get(d)))
+  private[graft] val climCache = new SessionMemo[DataFrame]
+
+  private def tsCellsCached(s: SparkSession, d: String): DataFrame =
+    cellCache.getOrElseUpdate(s, d)(
+      graft.argo.Atlas.aggTS(ExportAtlas.pairs(s, pipelineCached(s, d)))
+        .filter(lit(true)).persist())
+
+  private def climTSCached(s: SparkSession, d: String): DataFrame =
+    climCache.getOrElseUpdate(s, d)(
+      ExportAtlas.finalizeTS(tsCellsCached(s, d)).filter(lit(true)).persist())
 
   private def rawHeader(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d)
@@ -322,8 +267,9 @@ object ArgoQueries extends QueryModule {
   // profiles are already at rest) — memoized per (session, dir) so bench
   // reps measure the streaming maintenance, not repeated parquet writes;
   // the checkpoint below stays fresh per invocation (a reused checkpoint
-  // would replay offsets and skip the maintenance under test)
-  private val streamSrcMemo = new SessionMemo[String]
+  // would replay offsets and skip the maintenance under test); a session
+  // reset deletes the landed dir with the entry
+  private val streamSrcMemo = new SessionMemo[java.nio.file.Path]
   /** Physical plan of the most recent q108 STREAMING execution. The
     * blanket PlanSpec sweep only ever sees the memory-sink table q108
     * returns — the streaming plan executes inside the query body and is
@@ -356,11 +302,11 @@ object ArgoQueries extends QueryModule {
       // GDAC sync has at scale (a sync lands many files, not two).
       profiles.repartition(64).write.mode("overwrite")
         .parquet(dir.resolve("profiles").toString)
-      dir.resolve("profiles").toString
+      dir
     }
     val sdf = s.readStream.schema(profiles.schema)
       .option("maxFilesPerTrigger", "32")
-      .parquet(pdir)
+      .parquet(pdir.resolve("profiles").toString)
     // per-invocation name so a rep can never collide with a live table;
     // PREVIOUS invocations' memory-sink views are dropped here (the
     // returned frame reads the CURRENT table lazily, so the current one

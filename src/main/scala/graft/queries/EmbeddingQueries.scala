@@ -792,8 +792,8 @@ object EmbeddingQueries extends QueryModule {
     * and re-packed the whole index (the scale10 candidate probe measured
     * that rebuild at 1.9 s of q122's 2.2 s 10× wall). The checkpointed
     * index is (label, vec_id, pv, nrm, src) — the IVF-partitioned
-    * VecStore's in-session twin; `assigned` is probes × nProbe rows.
-    * Invalidated at the bench's state barriers like every session memo.
+    * VecStore's in-session twin (the unread `vec` array is projected away
+    * before the checkpoint); `assigned` is probes × nProbe rows.
     * [[ivfIngestSearch]] keeps taking arbitrary frames unmemoized — the
     * spec's planted-delta corpora must never collide with this key. */
   private val ivfIdxMemo = new SessionMemo[(DataFrame, DataFrame)]
@@ -807,7 +807,8 @@ object EmbeddingQueries extends QueryModule {
       val (idx, assigned) = ivfIngestParts(
         all.filter(col("vec_id") % DeltaMod =!= DeltaRem),
         all.filter(col("vec_id") % DeltaMod === DeltaRem))
-      (idx.localCheckpoint(), assigned.localCheckpoint())
+      (idx.select(col("label"), col("vec_id"), col("pv"), col("nrm"),
+        col("src")).localCheckpoint(), assigned.localCheckpoint())
     }
 
   private def q122(s: SparkSession, d: String): DataFrame = {
@@ -1002,18 +1003,15 @@ object EmbeddingQueries extends QueryModule {
   private val MmrDivW = 3L
 
   /** q113's checkpointed shortlist, one per (session, corpus) — see the
-    * scale-shape note above. Session blocks dropped wholesale must
-    * invalidate this (the fwdMemo contract): Bench's cold stages call
-    * [[invalidateSessionMemos]] beside TextQueries'. */
+    * scale-shape note above. */
   private val mmrShortMemo = new SessionMemo[DataFrame]
 
   /** The near-dup family's checkpointed LSH band-id frame, per (session,
-    * corpus#bits) — see nearDupPairsSplit. Same truncated-lineage
-    * contract as mmrShortMemo: wholesale unpersists must invalidate. */
+    * corpus#bits) — see nearDupPairsSplit. */
   private val vecBandMemo = new SessionMemo[DataFrame]
 
   /** q69's checkpointed PQ codes frame, per (session, corpus) — the
-    * encode pass under frozen codebooks; same contract as vecBandMemo. */
+    * encode pass under frozen codebooks. */
   private val pqCodeMemo = new SessionMemo[DataFrame]
 
   /** The near-dup scoring model — (vec_id → packed vector, norm) held in
@@ -1023,24 +1021,11 @@ object EmbeddingQueries extends QueryModule {
     * both survived the bench's cold barriers — making stores-stage "cold"
     * q43 warm on the scoring side — and rode every scoring task's closure
     * as a never-evicted ~corpus-sized HashMap). A broadcast ships once
-    * per executor instead of per task closure; invalidation at the
-    * session barriers drops the reference and the ContextCleaner reaps
-    * the blocks (the barrier's System.gc already exists for exactly
-    * that). */
+    * per executor instead of per task closure; [[SessionMemo.reset]]
+    * destroys it. */
   private val pvModelMemo =
     new SessionMemo[org.apache.spark.broadcast.Broadcast[
       java.util.HashMap[Long, (Array[Byte], Double)]]]
-
-  /** Forget this session's memoized shortlist checkpoints (the
-    * TextQueries.invalidateSessionMemos twin — a truncated-lineage
-    * checkpoint whose blocks were unpersisted cannot be recomputed). */
-  private[graft] def invalidateSessionMemos(s: SparkSession): Unit = {
-    mmrShortMemo.invalidate(s)
-    vecBandMemo.invalidate(s)
-    pqCodeMemo.invalidate(s)
-    pvModelMemo.invalidate(s)
-    ivfIdxMemo.invalidate(s)
-  }
 
   /** Attribution frames for the bench's scale10 stage (the q43cand/q43out
     * discipline extended to the whole rehearsal family): q41's deduped

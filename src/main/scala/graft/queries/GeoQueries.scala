@@ -137,12 +137,6 @@ object GeoQueries extends QueryModule {
 
   private val pairsMemo = new SessionMemo[DataFrame]
 
-  /** Forget this session's checkpointed pair frame (the
-    * TextQueries.invalidateSessionMemos twin — wholesale unpersists
-    * destroy the truncated-lineage blocks, so the memo must forget). */
-  private[graft] def invalidateSessionMemos(s: SparkSession): Unit =
-    pairsMemo.invalidate(s)
-
   private val sqlPairs =
     s"""prof AS (
        |  SELECT pk, lon, lat, x,

@@ -69,11 +69,6 @@ object KernelQueries extends QueryModule {
 
   private val profilesMemo = new SessionMemo[DataFrame]
 
-  /** Truncated-lineage contract, same as the TextQueries twin: callers
-    * that unpersist the session's blocks wholesale must invalidate. */
-  private[graft] def invalidateSessionMemos(s: SparkSession): Unit =
-    profilesMemo.invalidate(s)
-
   private def buildProfiles(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .groupBy(col("l_orderkey"))

@@ -13,25 +13,49 @@ trait QueryModule {
   def defs: Map[String, QueryDef]
 }
 
-/** Session-scoped memo on a (session, key) pair — the ArgoQueries
-  * FrameCache discipline generalized: keyed WEAKLY by the session object
-  * (a stopped session must never be pinned — it holds the whole
-  * SparkContext + plan graph; an identity-hash key would both pin it
-  * forever and risk serving another session's entry on a hash collision),
-  * with stopped-session eviction on every touch, so a process cycling
-  * sessions is bounded at live sessions plus at most the stopped ones
-  * created since the last touch. */
+/** Session-scoped memo on a (session, key) pair — the ONE mechanism for
+  * per-session state. Keyed WEAKLY by the session object (an
+  * identity-hash key would both pin a session forever and risk serving
+  * another session's entry on a hash collision), with stopped-session
+  * eviction on every touch. Values are STRONG: for a persisted frame the
+  * memo handle is the only handle (UDAF-bearing plans are never
+  * `sameResult` across builds, so a rebuild would register a second
+  * copy of the cells while an orphaned first one could never be
+  * unpersisted).
+  *
+  * What that bounds — and what it does not: a memoized DataFrame holds
+  * its session strongly, so the weak key only clears once the memo
+  * forgets the entry, and the stopped-session eviction only fires when
+  * the session's SparkContext stops. `spark.newSession()` siblings share
+  * one SparkContext that never stops, so a process that opens a fresh
+  * sibling per unit of work keeps every such session, and its memoized
+  * frames, reachable until [[SessionMemo.reset]] is called for it.
+  *
+  * Every memo registers itself with the companion at construction, so
+  * [[SessionMemo.reset]] releases all of a session's state in one call. */
 private[graft] final class SessionMemo[V] {
-  /** Lazy cell: TrieMap.getOrElseUpdate may evaluate its default in TWO
-    * racing first callers (only one insertion wins, but both builds run)
-    * — for a memo whose build materializes a localCheckpoint that means
-    * a duplicate checkpoint whose orphaned blocks stay pinned until
+  /** Build-once cell: TrieMap.getOrElseUpdate may evaluate its default in
+    * TWO racing first callers (only one insertion wins, but both builds
+    * run) — for a memo whose build materializes a localCheckpoint that
+    * means a duplicate checkpoint whose orphaned blocks stay pinned until
     * session end. Racing callers may construct two Holders (cheap), but
-    * both receive the WINNING one and force its single lazy build. */
-  private final class Holder(build: () => V) { lazy val value: V = build() }
+    * both receive the WINNING one and force its single build. */
+  private final class Holder(build: () => V) {
+    @volatile private var built: Option[V] = None
+    def value: V = built.getOrElse(synchronized {
+      if (built.isEmpty) built = Some(build())
+      built.get
+    })
+    def peek: Option[V] = built
+  }
 
   private val cache = new java.util.WeakHashMap[SparkSession,
     scala.collection.concurrent.TrieMap[String, Holder]]()
+
+  SessionMemo.registry.add(this)
+
+  private def entries(s: SparkSession) =
+    cache.synchronized(Option(cache.get(s)))
 
   def getOrElseUpdate(s: SparkSession, key: String)(build: => V): V = {
     val per = cache.synchronized {
@@ -46,11 +70,52 @@ private[graft] final class SessionMemo[V] {
     per.getOrElseUpdate(key, new Holder(() => build)).value
   }
 
-  /** Drop this session's entries (e.g. after the caller destroyed their
-    * backing blocks — a truncated-lineage checkpoint cannot be rebuilt,
-    * so the memo must forget it rather than serve a dead frame). */
-  def invalidate(s: SparkSession): Unit =
-    cache.synchronized { Option(cache.get(s)).foreach(_.clear()) }
+  /** The built value for (s, key), if any — never builds. */
+  def peek(s: SparkSession, key: String): Option[V] =
+    entries(s).flatMap(_.get(key)).flatMap(_.peek)
+
+  private def built(s: SparkSession): Seq[V] =
+    entries(s).toSeq.flatMap(_.values.flatMap(_.peek))
+
+  private def forget(s: SparkSession): Unit = entries(s).foreach(_.clear())
+}
+
+private[graft] object SessionMemo {
+  private val registry =
+    new java.util.concurrent.ConcurrentLinkedQueue[SessionMemo[_]]()
+
+  /** Every value any memo holds for `s` (built entries only). */
+  private[graft] def live(s: SparkSession): Seq[Any] = {
+    import scala.jdk.CollectionConverters._
+    registry.asScala.toSeq.flatMap(_.built(s))
+  }
+
+  /** Release a memoized value: a persisted frame is unpersisted, a
+    * broadcast destroyed, a landed temp dir deleted, and a tuple
+    * releases each of its parts. */
+  private def release(v: Any): Unit = v match {
+    case df: org.apache.spark.sql.Dataset[_] => df.unpersist(blocking = false)
+    case b: org.apache.spark.broadcast.Broadcast[_] => b.destroy()
+    case p: java.nio.file.Path => graft.TempDirs.deleteRec(p.toString)
+    case t: Product => t.productIterator.foreach(release)
+    case _ => ()
+  }
+
+  /** Drop ALL of `s`'s session state, in this order: the session's
+    * blocks and cached plans (a truncated-lineage checkpoint whose blocks
+    * are gone cannot be recomputed, and a cached-plan entry would shadow
+    * a memo's re-persist), then every memoized value, then the memo
+    * entries themselves — so the next consumer rebuilds instead of
+    * serving a dead frame — and finally a GC, which lets the
+    * ContextCleaner reap the now-unreferenced broadcast and shuffle
+    * blocks that unpersist cannot touch. */
+  def reset(s: SparkSession): Unit = {
+    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    s.sharedState.cacheManager.clearCache()
+    live(s).foreach(release)
+    registry.forEach(_.forget(s))
+    System.gc()
+  }
 }
 
 /** Golden-fixture oracles for queries whose kernels are not reasonably

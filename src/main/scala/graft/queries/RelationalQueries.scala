@@ -599,26 +599,16 @@ object RelationalQueries extends QueryModule {
   private val zorderMemo =
     scala.collection.concurrent.TrieMap.empty[String, (String, Long, Long, Long)]
 
-  /** Forget ONLY the checkpoint-backed memo (the trade-pair frame) —
-    * the hook for mid-suite barriers that unpersist the block manager
-    * wholesale: an unpersisted localCheckpoint has truncated lineage
-    * and cannot be recomputed, so the memo must be dropped or it serves
-    * a dead frame; the DISK-backed q129 layout memo, by contrast,
-    * survives an unpersist untouched and must stay warm there (deleting
-    * its dirs is forceCold's job, not a barrier's). */
-  private[graft] def releaseCheckpointMemos(s: SparkSession): Unit =
-    tradePairsMemo.invalidate(s)
-
-  /** Clear q129's per-session layout memo and reclaim its written dirs,
-    * and forget the memoized trade-pair checkpoint — the bench's
-    * forceCold hook (a cold rep must pay the rewrite). */
-  private[graft] def invalidateSessionMemos(s: SparkSession): Unit = {
+  /** Forget q129's layout memo and reclaim its written dirs — the
+    * bench's cold hook (a cold rep must pay the rewrite). The layout is
+    * process-wide DISK state, not session state: [[SessionMemo.reset]]
+    * leaves it warm. */
+  private[graft] def reclaimLayoutDirs(): Unit = {
     zorderMemo.values.foreach { case (dir, _, _, _) =>
       graft.TempDirs.deleteRec(
         new java.io.File(dir).getParentFile.getAbsolutePath)
     }
     zorderMemo.clear()
-    releaseCheckpointMemos(s)
   }
 
   private def eventsNormalized(s: SparkSession, d: String): DataFrame =

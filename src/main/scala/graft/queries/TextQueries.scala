@@ -1593,12 +1593,15 @@ object TextQueries extends QueryModule {
     // i.e. neither arm alone fills the session. Two driver threads
     // submit both; FIFO scheduling back-fills one arm's stage tails
     // with the other's tasks. Plans and results are unchanged — only
-    // WHEN the two checkpoints materialize moves.
-    import scala.concurrent.{Await, Future}
+    // WHEN the two checkpoints materialize moves. Each arm blocks on
+    // Spark jobs, so it runs inside `blocking` — the global pool then
+    // adds a thread rather than starving other work of one.
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val fBm = Future(q65(s, d).select(col("doc_id"), col("rnk").as("bm25_rnk")))
-    val fPieces = Future(hybridPieces(s, d))
+    val fBm = Future(blocking(
+      q65(s, d).select(col("doc_id"), col("rnk").as("bm25_rnk"))))
+    val fPieces = Future(blocking(hybridPieces(s, d)))
     val bm = Await.result(fBm, Duration.Inf)
     val (weights, qw) = Await.result(fPieces, Duration.Inf)
     val norms = weights.groupBy(col("doc_id"))
@@ -2427,8 +2430,7 @@ object TextQueries extends QueryModule {
   private val histMemo =
     scala.collection.concurrent.TrieMap.empty[String, Array[(Long, Long)]]
 
-  /** Drop the process-lifetime driver models (the invalidate() the
-    * SessionMemo twins carry, for symmetry): for callers that re-land a
+  /** Drop the process-lifetime driver models: for callers that re-land a
     * corpus at a previously used path instead of a fresh dir. */
   private[graft] def invalidateDriverModels(): Unit = histMemo.clear()
 
@@ -2578,7 +2580,7 @@ object TextQueries extends QueryModule {
       case Some(table) =>
         // NO session materialization — each consumer subtree plans its
         // own bucketed scan. Measured against both cache forms on the
-        // REGISTERED queries (tools/ProbeTermStore2, sf0.1): scan-only
+        // REGISTERED queries (tools/ProbeTermStore, sf0.1): scan-only
         // q97 min 1.78 s vs persist(table) 3.64 s, bucket-pinned persist
         // 3.00 s, cold rebuild 2.48 s. The round-9 persist LOST to the
         // cold rebuild because every one of the ~16 consumer references
@@ -2642,21 +2644,6 @@ object TextQueries extends QueryModule {
     * reconstruction that could drift from it. */
   private[graft] def forwardIndexProbe(s: SparkSession, d: String): DataFrame =
     forwardIndex(s, d)
-
-  /** Forget this session's memoized forward-index checkpoints. A caller
-    * that unpersists the session's blocks wholesale (Bench's scale
-    * stage) MUST call this: a localCheckpoint's lineage is truncated, so
-    * an unpersisted one cannot be recomputed and the memo would serve a
-    * dead frame forever. */
-  private[graft] def invalidateSessionMemos(s: SparkSession): Unit = {
-    fwdMemo.invalidate(s)
-    bandMemo.invalidate(s)
-    subAnchorMemo.invalidate(s)
-    jaccardBaseMemo.invalidate(s)
-    jaccardBandMemo.invalidate(s)
-    sparseWeightsMemo.invalidate(s)
-    hybridWeightsMemo.invalidate(s)
-  }
 
   /** Attribution frames for the bench's scale10 stage — one per text
     * member of the rehearsal family, each the intermediate whose row
@@ -2742,7 +2729,7 @@ object TextQueries extends QueryModule {
     // and every BROADCAST build re-executed the dfreq aggregation +
     // two-tier join single-threaded on the driver (the q43 candidate-tier
     // disease). Same width class as the fwdMemo checkpoint it derives
-    // from. The STORE path stays scan-only by design (ProbeTermStore2:
+    // from. The STORE path stays scan-only by design (ProbeTermStore:
     // scan-only 1.78 s beat every persist form; the df sidecars already
     // make each consumer's subtree a vocabulary-sized read).
     if (termStoreTable(s, d).isEmpty)

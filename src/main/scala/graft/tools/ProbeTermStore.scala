@@ -19,9 +19,10 @@ import graft.functions.{FP, TextFns => T}
 // references the index from ~16 consumer subtrees and every reference
 // pays an InMemoryTableScan decompression of the whole columnar cache,
 // while the plain bucketed read gives each consumer a column-pruned
-// parquet scan fused into its own codegen stage. tools/ProbeTermStore2
-// timed the REGISTERED queries per strategy (sf0.1, local[4] minima):
-// scan-only 1.78 s < cold 2.48 s < pinned 3.00 s < persist 3.64 s.
+// parquet scan fused into its own codegen stage. The REGISTERED queries
+// timed per strategy (sf0.1, local[4] minima; SCALING.md records the
+// run): scan-only 1.78 s < cold 2.48 s < pinned 3.00 s < persist 3.64 s.
+// The last section below times the store and cold registered paths.
 // Landed: the store branch of TextQueries.forwardIndex holds NO session
 // state at all.
 object ProbeTermStore {
@@ -132,9 +133,7 @@ object ProbeTermStore {
     spark.conf.unset("spark.graft.termStore")
     // the registered cold path for the same consumers
     (1 to 2).foreach { r =>
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      graft.queries.TextQueries.invalidateSessionMemos(spark)
+      graft.queries.SessionMemo.reset(spark)
       time(s"registered q97 cold  rep$r") {
         graft.SparkEntry.queries("q97_sparse_cosine")(spark, d).count()
       }

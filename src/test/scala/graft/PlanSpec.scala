@@ -424,7 +424,7 @@ class PlanSpec extends SparkSuite {
     // climPeek is READ-ONLY: it can only see a memo entry that the q76
     // run above registered — reverting q76 to a bare climTS fails here
     // (the old probe persisted on a memo miss, so it passed vacuously)
-    val memoed = graft.queries.ArgoQueries.climPeek(spark, d)
+    val memoed = graft.queries.ArgoQueries.climCache.peek(spark, d)
     assert(memoed.isDefined,
       "q76 must register the memoized cells frame")
     assert(memoed.get.storageLevel.useMemory,
