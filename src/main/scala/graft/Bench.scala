@@ -10,8 +10,7 @@ object Bench {
     * decorrelating replicas from each other; bit-identical copies would
     * give every vector 9 exact dups and grow the near-dup pair set
     * quadratically (measured 25× wall on q67 at 10×), an artifact of the
-    * fixture, not the plan. Shared by the bench's scale10 stage and the
-    * SCALING.md measurement probes (tools/ProbeHeadPct). */
+    * fixture, not the plan. */
   private[graft] def buildScale10(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.functions._
     val dir = graft.TempDirs.create("graft-scale10").toString
@@ -41,10 +40,63 @@ object Bench {
     * checkpoint-hygiene lesson applied to the corpus-sized stage dirs:
     * without it every bench run leaks a ~corpus of parquet into tmp for
     * the host's lifetime (DROP TABLE on a path-backed table removes only
-    * metadata). private[graft] so the measurement probes that build
-    * scale10 corpora (tools/ProbeHeadPct) can clean up after themselves.
-    * Delegates to [[TempDirs.deleteRec]] (one delete implementation). */
+    * metadata). private[graft] so specs that build corpora can clean up
+    * after themselves. Delegates to [[TempDirs.deleteRec]] (one delete
+    * implementation). */
   private[graft] def deleteRec(root: String): Unit = TempDirs.deleteRec(root)
+
+  /** Wall seconds of `body` and its result; a throw propagates. */
+  private def clock[T](body: => T): (Double, T) = {
+    val t0 = System.nanoTime()
+    val r = body
+    ((System.nanoTime() - t0) / 1e9, r)
+  }
+
+  /** THE timing point of every measured query run: wall seconds and the
+    * result, or None when the body threw. A failure is logged once, here,
+    * and never yields a time — a fast time-to-failure published as a
+    * measurement would make a broken run look FASTER than a healthy one. */
+  private[graft] def timed[T](tag: String)(body: => T): Option[(Double, T)] =
+    try Some(clock(body))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $tag FAILED: " +
+        s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
+      None
+    }
+
+  /** The re-run rule: a later run replaces the published result only when
+    * it succeeded and is strictly faster, or when every earlier run
+    * failed (a burst only ever inflates a wall, so the minimum of the
+    * successful runs is the honest one). */
+  private[graft] def faster[T](published: Option[(Double, T)],
+                               next: Option[(Double, T)]): Option[(Double, T)] =
+    (published ++ next).minByOption(_._1)
+
+  /** Fastest SUCCESSFUL run of `reps` (None when every run failed) — the
+    * warm-number discipline of every published wall. `before` runs ahead
+    * of each rep, outside the timed window (the stores stage's per-rep
+    * cold reset). */
+  private[graft] def best[T](tag: String, reps: Int, before: => Unit = ())
+                            (body: => T): Option[(Double, T)] =
+    (1 to reps).foldLeft(Option.empty[(Double, T)]) { (acc, _) =>
+      before
+      faster(acc, timed(tag)(body))
+    }
+
+  /** Run `body` with each key set (Some) or unset (None), restoring every
+    * key's prior value — or its absence — afterwards, also when the body
+    * throws: unset alone would clobber a pre-existing session override. */
+  private[graft] def withConfs[T](spark: SparkSession,
+                                  confs: Seq[(String, Option[String])])
+                                 (body: => T): T = {
+    def put(kvs: Seq[(String, Option[String])]): Unit = kvs.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    put(confs)
+    try body finally put(prior)
+  }
 
   /** Sink keeping the calibration spin loop's result alive (a dead loop
     * would JIT away and calibrate nothing). */
@@ -57,16 +109,14 @@ object Bench {
     * is nearly contention-INSENSITIVE and is therefore only the
     * machine-speed numerator of the verdict — the contention signal
     * lives in [[calibSpinPar]]'s gang wall. */
-  private[graft] def calibSpin(): Double = {
-    val t0 = System.nanoTime()
+  private[graft] def calibSpin(): Double = clock {
     var h = 0x9E3779B97F4A7C15L
     var i = 0
     while (i < 150000000) {
       h ^= h >>> 33; h *= 0xFF51AFD7ED558CCDL; h += i; i += 1
     }
     spinSink = h
-    (System.nanoTime() - t0) / 1e9
-  }
+  }._1
 
   /** N-thread gang of the fixed spin workload, timed together (wall
     * seconds until ALL threads finish). The single-thread spin is nearly
@@ -81,8 +131,7 @@ object Bench {
     * min(N, cores, cgroup quota), no within-run baseline needed), which
     * is the property the r9 within-run-drift verdict was blind to
     * (uniform whole-run load leaves drift ≈ 1.0). */
-  private[graft] def calibSpinPar(n: Int): Double = {
-    val t0 = System.nanoTime()
+  private[graft] def calibSpinPar(n: Int): Double = clock {
     val ts = (1 to n).map { _ =>
       val t = new Thread(() => calibSpin())
       t.setDaemon(true)
@@ -90,8 +139,7 @@ object Bench {
       t
     }
     ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
-  }
+  }._1
 
   /** Effective CPU quota in cores from the cgroup (v2 `cpu.max`, v1
     * `cpu.cfs_quota_us`), −1 when unlimited or unreadable. Published in
@@ -243,13 +291,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.tune(
+      GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (codegen, shuffle machinery, AQE, parquet decode,
     // broadcast) so the first timed query measures its plan, not session
@@ -265,6 +308,14 @@ object Bench {
     } catch { case _: Throwable => }
     Warmup.run() // C2-compile the numeric kernels (shared JVM in local mode)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
+    val scale10On = sys.env.getOrElse("SPARK_GRAFT_SCALE10", "1") != "0"
+    val storesOn = sys.env.getOrElse("SPARK_GRAFT_STORES", "1") != "0"
+    def short(name: String): String = name.takeWhile(_ != '_')
+    // a re-run that replaced the published wall is logged with what it beat
+    def lateBeat(label: String, now: Option[(Double, Long)],
+                 was: Option[(Double, Long)]): Unit =
+      System.err.println(f"[bench] $label ${now.fold(0.0)(_._1)}%8.2f s (late re-run beat " +
+        was.fold("FAILED")(w => f"${w._1}%.2f") + ")")
     // repeats: report the fastest — steady-state timing. The default
     // of 2 absorbs per-query codegen compilation and host-level CPU
     // noise (observed 2x run-to-run on shared hardware); the first
@@ -302,6 +353,12 @@ object Bench {
         .map(i => i.usedOnHeapStorageMemory + i.usedOffHeapStorageMemory)
         .sum / (1024 * 1024)
       catch { case _: Throwable => -1L }
+    // RDD blocks only, read from the context's persistent-RDD registry
+    // (updated synchronously by unpersist, unlike the executor total,
+    // which is fed by the async listener bus and also counts broadcast
+    // blocks) — the measure SessionStateSpec asserts is 0 after a reset
+    def rddMB(): Long = spark.sparkContext.getRDDStorageInfo
+      .map(i => i.memSize + i.diskSize).sum / (1024 * 1024)
     // discarded JIT warm-up: the first execution of the spin loop
     // C2-compiles it, so an undiscarded "start" sample reads high and a
     // relative check would false-positive on an idle host
@@ -329,15 +386,10 @@ object Bench {
         * warm rep, so per-query walls are unchanged — only the suite wall
         * pays. The disk-backed q129 layout stays warm. */
       def stateBarrier(): Unit = {
-        val before = storageMB()
+        val (before, rddBefore) = (storageMB(), rddMB())
         graft.queries.SessionMemo.reset(spark)
-        // the status store is fed by an ASYNC listener bus — without the
-        // settle pause the readback reports the pre-barrier number (r10
-        // first run logged "now 144 MB" for a barrier that had freed
-        // everything)
-        Thread.sleep(300)
         System.err.println(s"[bench] state barrier: storage $before MB" +
-          s" -> ${storageMB()} MB")
+          s" -> ${storageMB()} MB, rdd blocks $rddBefore MB -> ${rddMB()} MB")
       }
       sample("start")
       val named = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -352,20 +404,11 @@ object Bench {
           sample(s"q$idx")
           if (idx / step == 2 || idx / step == 4) stateBarrier()
         }
-        def rep(): (Double, Long) = {
-          val t0 = System.nanoTime()
-          val rows = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-          ((System.nanoTime() - t0) / 1e9, rows)
-        }
-        var runs = (1 to reps).map(_ => rep())
-        // Only SUCCESSFUL reps may supply the published time: a rep that
-        // throws fast (transient OOM, analysis error) would otherwise win
-        // minBy with its time-to-failure — and its bogus sub-second "min"
-        // would also suppress the contention retries below.
-        def bestOk = runs.filter(_._2 >= 0) match {
-          case ok if ok.nonEmpty => Some(ok.minBy(_._1))
-          case _ => None
-        }
+        // Only SUCCESSFUL reps may supply the published time ([[best]]):
+        // a rep that throws fast (transient OOM, analysis error) would
+        // otherwise win with its time-to-failure — and its bogus
+        // sub-second "min" would also suppress the contention retries.
+        var bestOk = best(name, reps)(fn(spark, sfDir).count())
         // Contention guard: on shared hardware a CPU spike during both
         // default reps of a multi-second query inflates its min by 5-10x
         // (observed on the CPU-bound atlas quartet: 3-4 s clean vs 14-30 s
@@ -375,7 +418,7 @@ object Bench {
         // extra runs.
         var extra = 0
         while (extra < 2 && bestOk.forall(_._1 > 1.0)) {
-          runs :+= rep()
+          bestOk = faster(bestOk, timed(name)(fn(spark, sfDir).count()))
           extra += 1
         }
         // A query whose every rep failed gets NO time: publishing its
@@ -387,7 +430,7 @@ object Bench {
           case Some((dt, rows)) =>
             System.err.println(f"[bench] $name%-24s $dt%8.2f s ($rows rows)")
           case None =>
-            System.err.println(f"[bench] $name%-24s   FAILED (all ${runs.size} reps)")
+            System.err.println(f"[bench] $name%-24s   FAILED (all ${reps + extra} reps)")
         }
         name -> ((bestOk, fn))
       }.toMap
@@ -413,22 +456,15 @@ object Bench {
       // time, cheap next to publishing a phantom 2-4x block regression; a
       // burst value still under 0.4 distorts the total by < 0.3 s/query.
       val RerunThresholdSec = 0.4
-      val results2 = results.map { case (name, (best, fn)) =>
+      val results2 = results.map { case (name, (b, fn)) =>
         // all-reps-failed queries get one decorrelated chance too: a
         // transient condition (full /tmp, OOM burst) that cleared since
         // should not mark the whole suite broken
-        val dtF = if (best.forall(_._1 > RerunThresholdSec)) {
-          // a FAILED re-run must never publish its time-to-failure as the
-          // query's benchmark time — only a successful run may improve dt
-          val t0 = System.nanoTime()
-          val rows2 = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-          val dt2 = (System.nanoTime() - t0) / 1e9
-          if (rows2 >= 0 && best.forall(dt2 < _._1)) {
-            System.err.println(f"[bench] $name%-24s $dt2%8.2f s (late re-run beat " +
-              best.map(b => f"${b._1}%.2f").getOrElse("FAILED") + ")")
-            Some((dt2, rows2))
-          } else best
-        } else best
+        val dtF = if (b.forall(_._1 > RerunThresholdSec)) {
+          val b2 = faster(b, timed(name)(fn(spark, sfDir).count()))
+          if (b2 != b) lateBeat(f"$name%-24s", b2, b)
+          b2
+        } else b
         name -> dtF
       }
       sample("end")
@@ -449,38 +485,24 @@ object Bench {
     // 0.14–0.5× expected). On a contended verdict the whole main suite
     // re-runs ONCE (per-query minima merged — a burst only ever
     // inflates) and the published flag reports the FINAL pass.
-    // env override exists for TESTING the contended path (set it above
-    // 1.0 and the verdict must flag, re-run the whole suite once, and
-    // publish eff2/load2/wall2) — production runs use the default
-    val CalibEffFrac =
-      sys.env.getOrElse("SPARK_GRAFT_CALIB_FRAC", "0.5").toDouble
+    val CalibEffFrac = 0.5
     def effMin(ss: Seq[CalibSample]): Double =
       if (ss.isEmpty) calibExpected else ss.map(_.eff).min
     def isContended(ss: Seq[CalibSample]): Boolean =
       effMin(ss) < CalibEffFrac * calibExpected
-    val suiteT0 = System.nanoTime()
-    var (resultsM, calibMain) = runMainSuite()
-    val suiteWall = (System.nanoTime() - suiteT0) / 1e9
-    var contended = isContended(calibMain)
-    var calibRerun: Seq[CalibSample] = Nil
-    var suiteWall2 = -1.0
-    if (contended) {
+    val (suiteWall, (results1, calibMain)) = clock(runMainSuite())
+    val suiteRerun = if (!isContended(calibMain)) None else {
       System.err.println(f"[bench] calibration effCores ${effMin(calibMain)}%.1f" +
         f" < ${CalibEffFrac * calibExpected}%.1f (of $calibExpected%.0f expected)" +
         " — host contended; re-running the whole main suite once")
-      val rerunT0 = System.nanoTime()
-      val (res2, c2) = runMainSuite()
-      suiteWall2 = (System.nanoTime() - rerunT0) / 1e9
-      calibRerun = c2
-      resultsM = resultsM.map { case (k, a) =>
-        k -> ((a.toSeq ++ res2.getOrElse(k, None).toSeq) match {
-          case Seq() => None
-          case xs => Some(xs.minBy(_._1))
-        })
-      }
-      contended = isContended(c2)
+      Some(clock(runMainSuite()))
     }
-    val results2 = resultsM
+    val suiteWall2 = suiteRerun.fold(-1.0)(_._1)
+    val calibRerun = suiteRerun.fold(Seq.empty[CalibSample])(_._2._2)
+    val results2 = suiteRerun.fold(results1) { case (_, (res2, _)) =>
+      results1.map { case (k, a) => k -> faster(a, res2.getOrElse(k, None)) }
+    }
+    val contended = isContended(if (suiteRerun.isEmpty) calibMain else calibRerun)
     // ONE compact JSON line, printed LAST: the driver keeps only the final
     // ~2000 chars of stdout (BENCH_r03 measured tail=2000), and sbt appends
     // a ~70-char "[success]" line after us. Full query names alone are
@@ -521,28 +543,16 @@ object Bench {
     // forced to 0 makes the fallback run at bench scale, so the branch a
     // 100 TB deployment lives in carries a measured number, not just a
     // plan assertion (ArgoPipelineSpec pins shape and results).
-    val fallbackSec: Option[Double] = {
-      // save/restore rather than unset: unset would clobber a pre-existing
-      // session override of the cap
-      val prior = spark.conf.getOption("spark.graft.atlasBroadcastMaxRows")
-      try {
-        spark.conf.set("spark.graft.atlasBroadcastMaxRows", "0")
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries("q71_argo_atlas")(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
+    // (a crash in the forced-fallback branch is logged by [[timed]], not
+    // a silently absent stages key)
+    val fallbackSec: Option[Double] =
+      withConfs(spark, Seq("spark.graft.atlasBroadcastMaxRows" -> Some("0"))) {
+        timed("atlas_fallback")(
+          SparkEntry.queries("q71_argo_atlas")(spark, sfDir).count())
+      }.flatMap { case (dt, n) =>
         System.err.println(f"[bench] atlas_fallback          $dt%8.2f s ($n rows)")
         if (n > 0) Some(dt) else None
-      } catch { case e: Throwable =>
-        // a crash in the forced-fallback branch must be VISIBLE, not a
-        // silently absent stages key
-        System.err.println(s"[bench] atlas_fallback          FAILED: " +
-          s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(300)}")
-        None
-      } finally prior match {
-        case Some(v) => spark.conf.set("spark.graft.atlasBroadcastMaxRows", v)
-        case None => spark.conf.unset("spark.graft.atlasBroadcastMaxRows")
       }
-    }
     // Scale rehearsal: the heaviest corpus queries on a ~10× blowup of
     // documents + embeddings — a PERF gate, not a correctness one (the
     // driver's DuckDB gate owns values): each query must COMPLETE and its
@@ -611,12 +621,15 @@ object Bench {
         : Seq[(String, Double)] = {
       def onePass(): (Seq[(String, Double)], Seq[Double], Double) = {
         val effs = scala.collection.mutable.ArrayBuffer[Double]()
-        val t0 = System.nanoTime()
-        val keys = body(() => effs += effQuick())
-        // closing witness even for a body that never sampled (failed
-        // early) so the verdict always has at least one reading
-        effs += effQuick()
-        val wall = (System.nanoTime() - t0) / 1e9
+        val (wall, keys) = clock {
+          // a stage body that throws is logged and yields no keys
+          val keys = timed(s"$tag stage")(body(() => effs += effQuick()))
+            .fold(Seq.empty[(String, Double)])(_._2)
+          // closing witness even for a body that never sampled (failed
+          // early) so the verdict always has at least one reading
+          effs += effQuick()
+          keys
+        }
         System.err.println(f"[bench] $tag%-11s wall $wall%8.2f s, in-window eff " +
           effs.map(v => f"$v%.1f").mkString("[", ", ", "]") +
           f" / $calibExpected%.0f (band $bandMedian%.1f)")
@@ -665,10 +678,16 @@ object Bench {
         }
       }
     }
+    // the scale10 bands are CALIBRATED at sf0.1 / 32 cores and gate
+    // nothing elsewhere (a 4-core dev run would flag every member
+    // against 32-core walls)
+    def scale10Band(name: String): Double =
+      if (sfDir.endsWith("sf0.1") && nThreads == 32)
+        Scale10Bands.getOrElse(short(name), -1.0)
+      else -1.0
     val scale10: Seq[(String, Double)] =
-      if (sys.env.getOrElse("SPARK_GRAFT_SCALE10", "1") == "0") Nil
-      else stagePass("scale10") { sample => try {
-        import org.apache.spark.sql.functions._
+      if (!scale10On) Nil
+      else stagePass("scale10") { sample =>
         // drop the suite's leftover cached/checkpointed blocks first: a
         // full run leaves ~100 queries of block-manager state (memoized
         // pipelines, forward-index checkpoints, CC passes), and the
@@ -678,41 +697,25 @@ object Bench {
         // LATER stores stage — which does revisit sfDir — runs its own
         // reset first, by design, not by trusting this one to have run.
         graft.queries.SessionMemo.reset(spark)
-        val tb = System.nanoTime()
-        val dir = buildScale10(spark, sfDir)
-        System.err.println(f"[bench] scale10 build           ${(System.nanoTime() - tb) / 1e9}%8.2f s")
+        val (buildSec, dir) = clock(buildScale10(spark, sfDir))
+        System.err.println(f"[bench] scale10 build           $buildSec%8.2f s")
         sample() // witness between the build and the first member
         // density-scaled LSH: at 10× the corpus a deployment raises the
         // bits-per-table so candidates-per-bucket stay bounded (the knob
         // the near-dup family documents; 4 bits at 20k vectors measured
         // 170 s of quadratic candidates, 8 bits ~7 s). The gate verifies
         // the default; this stage measures the config a 10× corpus runs.
-        // save/restore, not unset — the same clobber-protection as the
-        // fallback probe above (a session-level override must survive)
-        val priorBits = spark.conf.getOption("spark.graft.nearDupBits")
-        spark.conf.set("spark.graft.nearDupBits", "8")
-        try {
-          def one(name: String): (Double, Long) = {
-            val t0 = System.nanoTime()
-            val n = try SparkEntry.queries(name)(spark, dir).count()
-              catch { case e: Throwable =>
-                System.err.println(s"[bench] scale10 $name FAILED: " +
-                  s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-                -1L
-              }
-            ((System.nanoTime() - t0) / 1e9, n)
-          }
+        try withConfs(spark, Seq("spark.graft.nearDupBits" -> Some("8"))) {
+          def run(name: String): Long = SparkEntry.queries(name)(spark, dir).count()
           val firstPass = Scale10Queries.map { name =>
             // min of `reps` runs, same warm-number discipline as the main
             // loop: single-rep scale10 times were observed to swing 5x on
             // shared hardware (q102: 6.2 s vs 31.6 s run to run)
-            val runs = (1 to reps).map(_ => one(name))
-            val ok = runs.filter(_._2 >= 0)
-            val (dt, n) =
-              if (ok.nonEmpty) ok.minBy(_._1) else (0.0, -1L)
-            System.err.println(f"[bench] scale10 ${name.takeWhile(_ != '_')}%-16s $dt%8.2f s ($n rows)")
+            val b = best(s"scale10 $name", reps)(run(name))
+            System.err.println(f"[bench] scale10 ${short(name)}%-16s " +
+              f"${b.fold(0.0)(_._1)}%8.2f s (${b.fold(-1L)(_._2)} rows)")
             sample() // in-window witness after every member
-            (name, dt, n)
+            name -> b
           }
           // Attribution counts for EVERY scale10 query (the q43cand/q43out
           // discipline, extended family-wide per VERDICT r8): candidates
@@ -734,26 +737,16 @@ object Bench {
           // from the artifact (q43: candidates vs scoring = q43 −
           // q43candsec; q67: its cand frame is the SCORED pair set, so
           // CC = q67 − q67candsec)
-          val s10Counts: Seq[(String, Double)] = Scale10Queries.flatMap { name =>
-            val q = name.takeWhile(_ != '_')
-            val (cand, candSec) = candFrames.get(name).map { f =>
-              val t0 = System.nanoTime()
-              val n = try f(spark, dir).count()
-                catch { case e: Throwable =>
-                  System.err.println(s"[bench] scale10 $q cand count FAILED: " +
-                    s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-                  -1L
-                }
-              (n, (System.nanoTime() - t0) / 1e9)
-            }.getOrElse((-1L, -1.0))
-            val out = firstPass.collectFirst {
-              case (n, _, rows) if n == name && rows >= 0 => rows
-            }.getOrElse(-1L)
-            System.err.println(f"[bench] scale10 $q candidates=$cand%d " +
-              f"(${math.max(0.0, candSec)}%.2f s) survivors=$out%d")
-            (if (cand >= 0) Seq(s"${q}cand" -> cand.toDouble,
-              s"${q}candsec" -> candSec) else Nil) ++
-              (if (out >= 0) Seq(s"${q}out" -> out.toDouble) else Nil)
+          val s10Counts: Seq[(String, Double)] = firstPass.flatMap { case (name, b) =>
+            val q = short(name)
+            val cand = candFrames.get(name).flatMap(f =>
+              timed(s"scale10 $q cand count")(f(spark, dir).count()))
+            val out = b.map(_._2)
+            System.err.println(f"[bench] scale10 $q candidates=${cand.fold(-1L)(_._2)}%d " +
+              f"(${cand.fold(0.0)(_._1)}%.2f s) survivors=${out.getOrElse(-1L)}%d")
+            cand.toSeq.flatMap { case (sec, n) =>
+              Seq(s"${q}cand" -> n.toDouble, s"${q}candsec" -> sec)
+            } ++ out.map(n => s"${q}out" -> n.toDouble)
           }
           // Second chance, scale10 edition (BENCH_r07 published q43 at
           // 31.6 s — 31x its 1x time — with both in-loop reps inside one
@@ -771,7 +764,7 @@ object Bench {
           // short burst, not a sustained one, in which case the 1x
           // main-suite number (fully decorrelated) is the tell.
           val Scale10AlarmRatio = 12.0
-          val secondPass = firstPass.map { case (name, dt, n) =>
+          val secondPass = firstPass.map { case (name, b) =>
             val mainDt = results2.get(name).flatten.map(_._1)
             // all-reps-failed gets the decorrelated retry too (the main
             // loop's rule at its second-chance pass): a transient
@@ -781,27 +774,16 @@ object Bench {
             // 1.25× its best known clean wall re-runs alone — the r13
             // gap was a window the effmin verdict called clean while
             // q43/q67 ran 1.35× their bands, under the 12× main-ratio
-            // line by two orders. Bands are CALIBRATED at sf0.1 / 32
-            // cores and gate nothing elsewhere (a 4-core dev run would
-            // flag every member against 32-core walls)
-            val band =
-              if (sfDir.endsWith("sf0.1") && nThreads == 32)
-                Scale10Bands.getOrElse(name.takeWhile(_ != '_'), -1.0)
-              else -1.0
-            val alarm = n < 0 ||
+            // line by two orders.
+            val alarm = b.forall { case (dt, _) =>
               mainDt.exists(m => dt > Scale10AlarmRatio * m) ||
-              queryOverBand(dt, band)
-            if (!alarm) (name, dt, n)
+                queryOverBand(dt, scale10Band(name))
+            }
+            if (!alarm) name -> b
             else {
-              val (dt2, n2) = one(name)
-              // a successful retry always replaces an all-failed entry
-              // (its placeholder dt of 0.0 would never lose a < compare);
-              // otherwise only a faster successful run may improve it
-              if (n2 >= 0 && (n < 0 || dt2 < dt)) {
-                System.err.println(f"[bench] scale10 ${name.takeWhile(_ != '_')}%-16s $dt2%8.2f s (late re-run beat " +
-                  (if (n < 0) "FAILED" else f"$dt%.2f") + ")")
-                (name, dt2, n2)
-              } else (name, dt, n)
+              val b2 = faster(b, timed(s"scale10 $name")(run(name)))
+              if (b2 != b) lateBeat(f"scale10 ${short(name)}%-16s", b2, b)
+              name -> b2
             }
           }
           // a failed scale10 query bills the same closed-fail penalty as
@@ -810,33 +792,19 @@ object Bench {
           // own `<q>slow` marker (fired-verdict-only, the stdout-budget
           // discipline) — the artifact then NAMES the slow member
           // instead of certifying the window by effmin alone.
-          secondPass.flatMap { case (name, dt, n) =>
-            val q = name.takeWhile(_ != '_')
-            // same sf/core calibration guard as the alarm above
-            val band =
-              if (sfDir.endsWith("sf0.1") && nThreads == 32)
-                Scale10Bands.getOrElse(q, -1.0)
-              else -1.0
-            val slowKey =
-              if (n >= 0 && queryOverBand(dt, band)) {
+          secondPass.flatMap { case (name, b) =>
+            val q = short(name)
+            val band = scale10Band(name)
+            val slowKey = b.filter { case (dt, _) => queryOverBand(dt, band) }
+              .map { _ =>
                 System.err.println(f"[bench] scale10 $q STILL over its " +
                   f"band $band%.2f s after re-run — flagged ${q}slow")
-                Seq(s"${q}slow" -> 1.0)
-              } else Nil
-            Seq(q -> (if (n >= 0) dt else FailPenaltySec)) ++ slowKey
+                s"${q}slow" -> 1.0
+              }
+            Seq(q -> b.fold(FailPenaltySec)(_._1)) ++ slowKey
           } ++ s10Counts
-        } finally {
-          priorBits match {
-            case Some(v) => spark.conf.set("spark.graft.nearDupBits", v)
-            case None => spark.conf.unset("spark.graft.nearDupBits")
-          }
-          deleteRec(dir)
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] scale10 stage FAILED: " +
-          s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-        Nil
-      } }
+        } finally deleteRec(dir)
+      }
     // Atlas rehearsal at 10× PROFILES: the reference's core aggregation
     // over 150k profiles (same grid — pair fan-out and aggregation work
     // scale with the profile side, state stays grid-bounded). Both the 1×
@@ -844,69 +812,50 @@ object Bench {
     // keep their positions (WMO-shifted), which is the worst case for
     // per-cell contention and the honest one for a denser ocean.
     val atlasScale: Seq[(String, Double)] =
-      if (sys.env.getOrElse("SPARK_GRAFT_SCALE10", "1") == "0") Nil
-      else stagePass("atlas-scale") { sample => try {
+      if (!scale10On) Nil
+      else stagePass("atlas-scale") { sample =>
+        import org.apache.spark.sql.DataFrame
         import org.apache.spark.sql.functions._
         val prof = graft.queries.ArgoQueries.profilesProbe(spark, sfDir)
           .persist()
         val atlas = graft.queries.ArgoQueries.ExportAtlas
-        // min-of-reps, same warm-number discipline as everywhere else:
-        // this stage published a 13 s x1 in one round and 2.1 s the next
-        // on identical code — single-run stage numbers carry the same
-        // burst exposure the main loop's reps exist to absorb
-        def run(body: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-               (src: org.apache.spark.sql.DataFrame): Double =
-          (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            val n = body(src).count()
-            val dt = (System.nanoTime() - t0) / 1e9
-            require(n > 0, "empty atlas")
-            dt
-          }.min
-        val runTS = run(src => atlas.climTS(spark, src)
-          .filter(col("CT") =!= 0.0f)) _
-        // EAPE two-pass at the same profile scales: aggTS alone misses the
-        // per-cell stats broadcast the second pass joins back in — the
-        // piece whose grid-resolution breakpoint SCALING.md argues; this
-        // stage carries its measured ratio
-        val runEAPE = run(src => atlas.climEAPE(spark, src, algo = "R14")
-          .filter(col("SIGSTAR") =!= 0.0f)) _
         val p10 = prof.crossJoin(
           spark.range(10).select(col("id").as("__rep")))
           .withColumn("WMO", col("WMO") + col("__rep").cast("int") * 1000000)
           .drop("__rep")
-        // independent try per family AND per scale within a family (the
-        // stores-split discipline, finished): each run publishes what it
-        // measured — a 10x failure drops only the 10x entry, never the
-        // already-measured 1x; the broken run is VISIBLE in the log and
-        // absent from the JSON
-        def family(tag: String, f: org.apache.spark.sql.DataFrame => Double,
+        // min-of-reps, same warm-number discipline as everywhere else:
+        // this stage published a 13 s x1 in one round and 2.1 s the next
+        // on identical code — single-run stage numbers carry the same
+        // burst exposure the main loop's reps exist to absorb.
+        // One timed entry per family AND per scale within a family: each
+        // run publishes what it measured — a 10x failure drops only the
+        // 10x entry, never the already-measured 1x; the broken run is
+        // VISIBLE in the log and absent from the JSON
+        def family(tag: String, f: DataFrame => DataFrame,
                    k1: String, k10: String): Seq[(String, Double)] = {
-          def one(scale: String, src: org.apache.spark.sql.DataFrame,
-                  k: String): Seq[(String, Double)] =
-            try Seq(k -> f(src))
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] atlas-scale $tag $scale FAILED: " +
-                s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-              Nil
-            }
+          def one(scale: String, src: DataFrame, k: String) =
+            best(s"atlas-scale $tag $scale", reps) {
+              require(f(src).count() > 0, "empty atlas")
+            }.map(k -> _._1)
           val r1 = one("x1", prof, k1)
           sample() // in-window witness per (family, scale)
           val r10 = one("x10", p10, k10)
           sample()
-          r1 ++ r10
+          r1.toSeq ++ r10
         }
-        val out = family("TS", runTS, "x1", "x10") ++
-          family("EAPE", runEAPE, "ex1", "ex10")
+        // EAPE two-pass at the same profile scales: aggTS alone misses the
+        // per-cell stats broadcast the second pass joins back in — the
+        // piece whose grid-resolution breakpoint SCALING.md argues; this
+        // stage carries its measured ratio
+        val out = family("TS", src => atlas.climTS(spark, src)
+            .filter(col("CT") =!= 0.0f), "x1", "x10") ++
+          family("EAPE", src => atlas.climEAPE(spark, src, algo = "R14")
+            .filter(col("SIGSTAR") =!= 0.0f), "ex1", "ex10")
         prof.unpersist(blocking = false)
         System.err.println("[bench] atlas_profiles " +
           out.map { case (k, v) => f"$k=$v%.2f s" }.mkString(", "))
         out
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] atlas-scale stage FAILED: " +
-          s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-        Nil
-      } }
+      }
     // At-rest store rehearsal: the layout family's registered consumers,
     // re-timed against stores actually LANDED from this corpus (the main
     // loop measures the conf-unset in-session recompute path). Build cost
@@ -915,8 +864,8 @@ object Bench {
     // (DocStoreSpec / TermStoreSpec / VecStoreSpec / ArgoPipelineSpec);
     // this stage carries the measured seconds.
     val storeTimes: Seq[(String, Double)] =
-      if (sys.env.getOrElse("SPARK_GRAFT_STORES", "1") == "0") Nil
-      else stagePass("stores") { sample => try {
+      if (!storesOn) Nil
+      else stagePass("stores") { sample =>
         val dir = graft.TempDirs.create("graft-stores").toString
         // The COLD in-session numbers the stores are up against: a fresh
         // session rebuilds the interp store / forward-index checkpoint
@@ -953,43 +902,30 @@ object Bench {
         // q129 joins in round 12 (events Z-store): cold pays the full
         // per-session layout rewrite (forceCold clears its memo), the
         // store path scans the once-per-ingest landing
+        // A failed cold baseline is logged and its key omitted, so no
+        // consumer silently compares the store path against a bogus
+        // baseline.
         val cold = Seq("q71_argo_atlas", "q97_sparse_cosine",
           "q78_ivfpq_ann", "q118_image_neardup", "q125_video_neardup",
           "q127_video_neardup_hamming", "q34_minhash_lsh",
           "q128_bloom_ingest", "q129_zorder_scan").flatMap { name =>
-          val oks = (1 to reps).flatMap { _ =>
-            forceCold()
-            val t0 = System.nanoTime()
-            val n = try SparkEntry.queries(name)(spark, sfDir).count()
-              catch { case e: Throwable =>
-                // a failed baseline must be VISIBLE (the fallback-probe
-                // discipline) and must never print its time-to-failure as
-                // if it were a measurement; the cold key is then omitted,
-                // so no consumer silently compares the store path against
-                // a bogus baseline
-                System.err.println(s"[bench] stores ${name.takeWhile(_ != '_')} cold FAILED: " +
-                  s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-                -1L
-              }
-            val dt = (System.nanoTime() - t0) / 1e9
-            if (n >= 0) Some(dt) else None
-          }
+          val q = short(name)
+          val b = best(s"stores $q cold", reps, before = forceCold())(
+            SparkEntry.queries(name)(spark, sfDir).count())
           sample() // in-window witness after every cold member
-          if (oks.nonEmpty) {
-            val dt = oks.min
-            System.err.println(f"[bench] stores ${name.takeWhile(_ != '_')}%-4s cold        $dt%8.2f s")
-            Some(s"${name.takeWhile(_ != '_')}_cold" -> dt)
-          } else None
+          b.map { case (dt, _) =>
+            System.err.println(f"[bench] stores $q%-4s cold        $dt%8.2f s")
+            s"${q}_cold" -> dt
+          }
         }
         // the store build below starts from the last forceCold()'s state
         // per-store build attribution (the once-per-ingest price each
         // family's per-session savings amortize — published split so a
         // total-build swing is attributable: r10's TermStore sidecars
-        // land inside buildterm, not smeared over the family)
+        // land inside buildterm, not smeared over the family). A failed
+        // build fails the stage: every store-path number below needs it.
         def timed1(tag: String)(body: => Unit): (String, Double) = {
-          val t0 = System.nanoTime()
-          body
-          val dt = (System.nanoTime() - t0) / 1e9
+          val (dt, _) = clock(body)
           System.err.println(f"[bench] stores build $tag%-10s $dt%8.2f s")
           s"build$tag" -> dt
         }
@@ -1048,9 +984,8 @@ object Bench {
           "spark.graft.mediaStore" -> s"$sfDir=bench_mediastore",
           "spark.graft.bandStore" -> s"$sfDir=bench_bandstore",
           "spark.graft.eventsZStore" -> s"$sfDir=$dir/eventsz")
-        val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        try {
+        try withConfs(spark, confs.map { case (k, v) => k -> Some(v) }) {
+          import org.apache.spark.sql.functions.{col, expr, size, sum}
           // VERDICT r12 task 3 — the compaction story in three published
           // numbers: the APPEND-DEGRADED pruning ratio (here), the timed
           // compacting rewrite (buildzcmp), and the RESTORED ratio
@@ -1059,113 +994,77 @@ object Bench {
           // → no AQE wrapper, so the leaf scan's numOutputRows is
           // readable (the aggregated q129's AdaptiveSparkPlanExec is
           // leaf-less and reported 0 when first measured here).
-          def zScanRows(tag: String): Option[Double] = try {
-            val q = graft.queries.RelationalQueries
-              .q129RectangleScan(spark, sfDir)
-            q.collect()
-            val r = q.queryExecution.executedPlan.collectLeaves()
-              .map(_.metrics.get("numOutputRows").map(_.value).getOrElse(0L))
-              .sum.toDouble
-            System.err.println(f"[bench] stores q129 prune ($tag): ${r.toLong}%d rows")
-            Some(r)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] stores q129 prune ($tag) FAILED: " +
-              s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-            None
-          }
+          def zScanRows(tag: String): Option[Double] =
+            timed(s"stores q129 prune ($tag)") {
+              val q = graft.queries.RelationalQueries
+                .q129RectangleScan(spark, sfDir)
+              q.collect()
+              q.queryExecution.executedPlan.collectLeaves()
+                .map(_.metrics.get("numOutputRows").map(_.value).getOrElse(0L))
+                .sum.toDouble
+            }.map { case (_, r) =>
+              System.err.println(f"[bench] stores q129 prune ($tag): ${r.toLong}%d rows")
+              r
+            }
           val zApp = zScanRows("append-degraded")
             .map("q129scan_app" -> _).toSeq
-          val zCmp = (try {
-            val t0 = System.nanoTime()
-            graft.queries.RelationalQueries
-              .compactEventsZStore(spark, s"$dir/eventsz")
-            val dt = (System.nanoTime() - t0) / 1e9
+          val zCmp = timed("stores z-compaction")(graft.queries.RelationalQueries
+              .compactEventsZStore(spark, s"$dir/eventsz")).map { case (dt, _) =>
             System.err.println(f"[bench] stores build zcompact $dt%8.2f s")
-            Some("buildzcmp" -> dt)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] stores z-compaction FAILED: " +
-              s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-            None
-          }).toSeq
-          val timed = Seq("q37_fingerprint", "q45_ann_ivf_kmeans",
+            "buildzcmp" -> dt
+          }.toSeq
+          val storePath = Seq("q37_fingerprint", "q45_ann_ivf_kmeans",
             "q71_argo_atlas", "q78_ivfpq_ann", "q97_sparse_cosine",
             "q118_image_neardup", "q125_video_neardup",
             "q127_video_neardup_hamming", "q34_minhash_lsh",
             "q128_bloom_ingest", "q129_zorder_scan").map { name =>
-            def one(): (Double, Long) = {
-              val t0 = System.nanoTime()
-              val n = try SparkEntry.queries(name)(spark, sfDir).count()
-                catch { case e: Throwable =>
-                  System.err.println(s"[bench] stores $name FAILED: " +
-                    s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-                  -1L
-                }
-              ((System.nanoTime() - t0) / 1e9, n)
-            }
-            val ok = (1 to reps).map(_ => one()).filter(_._2 >= 0)
-            val dt = if (ok.nonEmpty) ok.map(_._1).min else FailPenaltySec
-            System.err.println(f"[bench] stores ${name.takeWhile(_ != '_')}%-17s $dt%8.2f s")
+            val dt = best(s"stores $name", reps)(
+              SparkEntry.queries(name)(spark, sfDir).count())
+              .fold(FailPenaltySec)(_._1)
+            System.err.println(f"[bench] stores ${short(name)}%-17s $dt%8.2f s")
             sample() // in-window witness after every store-path member
-            name.takeWhile(_ != '_') -> dt
+            short(name) -> dt
           }
+          def minRep(tag: String)(body: => Long): Option[Double] =
+            best(s"stores $tag", reps)(body).map(_._1)
           // q71's PROFILE-SOURCE split, published so the store-vs-cold
-          // comparison is attributable from the artifact (ProbeAtlasStore
+          // comparison is attributable from the artifact (SCALING.md
           // carries the full breakdown): the store path's extra cost over
           // the in-session memo is exactly the bucketed parquet scan; the
           // cold path's is the interp recompute. Both are timed against
           // the SAME forced-materialization shape (sum over the array
           // column / a bare count of the pipeline output).
-          def minRep(body: => Long): Double =
-            (1 to reps).map { _ =>
-              val t0 = System.nanoTime()
-              body
-              (System.nanoTime() - t0) / 1e9
-            }.min
-          // independent try blocks: a failure in one split must neither
+          // Each split is independent: a failure in one must neither
           // discard the other's already-measured numbers nor log under
           // the wrong label
-          val splitQ71 = try {
-            val store = graft.argo.AtlasStore.loadBucketed(spark, "bench_atlasstore")
-            val scan = minRep(store.agg(
-              org.apache.spark.sql.functions.sum(
-                org.apache.spark.sql.functions.size(
-                  org.apache.spark.sql.functions.col("CT")))).head().getLong(0))
-            val interp = minRep(
+          val splitQ71 = for {
+            scan <- minRep("q71 scan")(
+              graft.argo.AtlasStore.loadBucketed(spark, "bench_atlasstore")
+                .agg(sum(size(col("CT")))).head().getLong(0))
+            interp <- minRep("q71 interp recompute")(
               graft.queries.ArgoQueries.profilesProbe(spark, sfDir).count())
+          } yield {
             System.err.println(f"[bench] stores q71 split: scan $scan%.2f s, interp recompute $interp%.2f s")
             Seq("q71scan" -> scan, "q71interp" -> interp)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] stores q71 split FAILED: " +
-              s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-            Nil
           }
           // the q97 twin: TermStore postings scan vs the per-session
           // forward-index rebuild (tokenize → doc_id shuffle →
           // checkpoint). Cold state is forced before EVERY rebuild rep,
-          // or rep 2 would time a memo hit.
-          val splitQ97 = try {
-            val tScan = minRep(
+          // or rep 2 would time a memo hit. The termStore conf is SET
+          // here (the store runs above need it) and forwardIndexProbe
+          // consults it — unset around the rebuild reps or this would
+          // time a store read
+          val splitQ97 = for {
+            tScan <- minRep("q97 scan")(
               graft.sources.TermStore.loadBucketed(spark, "bench_termstore")
-                .agg(org.apache.spark.sql.functions.sum(
-                  org.apache.spark.sql.functions.col("tf"))).head().getLong(0))
-            // the termStore conf is SET here (the timed store runs above
-            // need it) and forwardIndexProbe consults it — unset around
-            // the rebuild reps or this would time a store read
-            val priorTs = spark.conf.getOption("spark.graft.termStore")
-            spark.conf.unset("spark.graft.termStore")
-            val fwd = try (1 to reps).map { _ =>
-              forceCold()
-              val t0 = System.nanoTime()
-              graft.queries.TextQueries.forwardIndexProbe(spark, sfDir).count()
-              (System.nanoTime() - t0) / 1e9
-            }.min finally priorTs.foreach(
-              spark.conf.set("spark.graft.termStore", _))
+                .agg(sum(col("tf"))).head().getLong(0))
+            fwd <- withConfs(spark, Seq("spark.graft.termStore" -> None)) {
+              best("stores q97 index rebuild", reps, before = forceCold())(
+                graft.queries.TextQueries.forwardIndexProbe(spark, sfDir).count())
+            }.map(_._1)
+          } yield {
             System.err.println(f"[bench] stores q97 split: scan $tScan%.2f s, index rebuild $fwd%.2f s")
             Seq("q97scan" -> tScan, "q97fwd" -> fwd)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] stores q97 split FAILED: " +
-              s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-            Nil
           }
           // the q129 pruning ratio: rows the z-clustered scan EMITTED
           // (post row-group pruning) vs the table — the ZOrderSpec
@@ -1177,39 +1076,32 @@ object Bench {
           val splitQ129 = zScanRows("restored").map { scanned =>
             val total = spark.read.parquet(s"$sfDir/events.parquet").count()
             Seq("q129scan" -> scanned, "q129rows" -> total.toDouble)
-          }.getOrElse(Nil)
+          }
           // media pair splits (VERDICT r12 task 4) — decode vs scan, the
           // q71interp/q71scan discipline: a losing media pair is then
           // attributable from the artifact (per-session decode saved vs
           // hash-table scan paid). bit_xor forces the hash computation
           // without the ANSI overflow a plain sum of 64-bit hashes risks.
-          val splitMedia = try {
-            import org.apache.spark.sql.functions.{col, expr}
-            def probe(df: org.apache.spark.sql.DataFrame, c: String): Double =
-              minRep(df.agg(expr(s"bit_xor($c)")).head().getLong(0))
-            val iScan = probe(spark.table("bench_mediastore_img"), "ph_hi")
-            val iDec = probe(graft.queries.StreamMultimodalQueries
+          def probe(tag: String, df: => org.apache.spark.sql.DataFrame,
+                    c: String): Option[Double] =
+            minRep(s"media $tag")(df.agg(expr(s"bit_xor($c)")).head().getLong(0))
+          val splitMedia = for {
+            iScan <- probe("img scan", spark.table("bench_mediastore_img"), "ph_hi")
+            iDec <- probe("img decode", graft.queries.StreamMultimodalQueries
               .imageDecodeProbe(spark, sfDir), "ph_hi")
-            val vScan = probe(spark.table("bench_mediastore_vid"), "fh_hi")
-            val vDec = probe(graft.queries.StreamMultimodalQueries
+            vScan <- probe("vid scan", spark.table("bench_mediastore_vid"), "fh_hi")
+            vDec <- probe("vid decode", graft.queries.StreamMultimodalQueries
               .videoDecodeProbe(spark, sfDir), "fh_hi")
+          } yield {
             System.err.println(f"[bench] stores media split: img scan $iScan%.2f" +
               f" / decode $iDec%.2f, vid scan $vScan%.2f / decode $vDec%.2f s")
             Seq("q118scan" -> iScan, "q118dec" -> iDec,
               "q125scan" -> vScan, "q125dec" -> vDec)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] stores media split FAILED: " +
-              s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-            Nil
           }
-          val split = splitQ71 ++ splitQ97 ++ splitQ129 ++ zApp ++ zCmp ++
-            splitMedia
-          (("build" -> build) +: cold) ++ timed ++ split ++ buildSplit
+          val split = Seq(splitQ71, splitQ97, splitQ129).flatten.flatten ++
+            zApp ++ zCmp ++ splitMedia.toSeq.flatten
+          (("build" -> build) +: cold) ++ storePath ++ split ++ buildSplit
         } finally {
-          prior.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None) => spark.conf.unset(k)
-          }
           (Seq("bench_docstore", "bench_atlasstore", "bench_bandstore") ++
             graft.sources.TermStore.tablesOf("bench_termstore") ++
             graft.queries.StreamMultimodalQueries
@@ -1217,11 +1109,7 @@ object Bench {
             .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
           deleteRec(dir)
         }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stores stage FAILED: " +
-          s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-        Nil
-      } }
+      }
     // Per-query band re-runs (VERDICT r13 task 2), placed HERE — after
     // the post-loop stages — deliberately: each published wall is
     // checked against the PREVIOUS round's artifact (BENCH_FULL.json,
@@ -1238,33 +1126,28 @@ object Bench {
         java.nio.charset.StandardCharsets.UTF_8), sfDir)
     } catch { case _: Throwable => Map.empty }
     val bandReruns = scala.collection.mutable.ArrayBuffer[String]()
-    val resultsFinal = results2.map { case (name, best) =>
-      val short = name.takeWhile(_ != '_')
-      val prev = prevWalls.getOrElse(short, -1.0)
-      if (!best.exists { case (dt, _) => mainOutlier(dt, prev) })
-        name -> best
+    val resultsFinal = results2.map { case (name, b) =>
+      val prev = prevWalls.getOrElse(short(name), -1.0)
+      if (!b.exists { case (dt, _) => mainOutlier(dt, prev) }) name -> b
       else {
-        bandReruns += short
-        val t0 = System.nanoTime()
-        val rows = try SparkEntry.queries(name)(spark, sfDir).count()
-          catch { case _: Throwable => -1L }
-        val dt2 = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] $name%-24s $dt2%8.2f s (band re-run; " +
-          f"prev round $prev%.2f s)")
-        // only a SUCCESSFUL faster run may improve the published wall
-        if (rows >= 0 && best.forall(dt2 < _._1)) name -> Some((dt2, rows))
-        else name -> best
+        bandReruns += short(name)
+        val again = timed(name)(SparkEntry.queries(name)(spark, sfDir).count())
+        again.foreach { case (dt2, _) =>
+          System.err.println(f"[bench] $name%-24s $dt2%8.2f s (band re-run; " +
+            f"prev round $prev%.2f s)")
+        }
+        name -> faster(b, again)
       }
     }
     if (bandReruns.nonEmpty)
       System.err.println(s"[bench] band re-runs: ${bandReruns.sorted.mkString(", ")}")
     val qs = resultsFinal.toSeq.sortBy(_._1)
-      .collect { case (k, Some((v, _))) => s"\"" + k.takeWhile(_ != '_') + "\":" + r2t(v) }
+      .collect { case (k, Some((v, _))) => s"\"" + short(k) + "\":" + r2t(v) }
       .mkString("{", ",", "}")
     // failed queries are OMITTED from "queries" (no bogus seconds) and
     // named here so the driver-parsed line itself shows the breakage
     val failed = resultsFinal.toSeq.sortBy(_._1)
-      .collect { case (k, None) => s"\"" + k.takeWhile(_ != '_') + "\"" }
+      .collect { case (k, None) => s"\"" + short(k) + "\"" }
     val total = resultsFinal.values.flatten.map(_._1).sum + FailPenaltySec * failed.size
     // Per-stage throughput, so the BASELINE.md comparison is mechanical:
     // the reference publishes pipeline throughput (profiles interpolated
@@ -1323,8 +1206,7 @@ object Bench {
         t.startsWith("\"procs\"") || t.startsWith("\"quota\"") ||
           t.startsWith("\"expected\""))
       // the verdict's threshold fraction is an INPUT like every other
-      // calibration input: an artifact produced under the env override
-      // (the contended-path test hook) must carry the fraction its flag
+      // calibration input: the artifact carries the fraction its flag
       // was computed with — full artifact only, per the r10 advice
       val full = (Seq(
         s""""t1":${arr(calibMain, _.t1, r2)}""",
@@ -1483,20 +1365,15 @@ object Bench {
     // clobber the committed full-run artifact — it happened twice across
     // rounds during query-level verification; partial runs land beside
     // it under a name no reader confuses with the closing artifact
-    val fullRun = only.isEmpty &&
-      sys.env.getOrElse("SPARK_GRAFT_SCALE10", "1") != "0" &&
-      sys.env.getOrElse("SPARK_GRAFT_STORES", "1") != "0"
+    val fullRun = only.isEmpty && scale10On && storesOn
     val artifact = if (fullRun) "BENCH_FULL.json" else "BENCH_FULL.partial.json"
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
-        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] $artifact write failed: " +
-        s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}")
-    }
+    timed(s"$artifact write")(java.nio.file.Files.write(
+      java.nio.file.Paths.get(artifact),
+      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     System.err.println(s"[bench] full ${fullLine.length} chars: $fullLine")
     System.err.println(s"[bench] stdout ${line.length} chars")
     println(line)
     spark.stop()
   }
 }
+

@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's canonical configuration.
   *
-  * All entry points (tests, Verify, Bench) go through here so plans are
-  * reproducible: UTC timestamps, AQE on, shuffle parallelism sized for the
+  * All entry points (tests, Verify, Bench, perfbench) build their sessions
+  * with [[builder]] + [[tune]] so plans are reproducible: UTC timestamps,
+  * AQE on, the [[graft.plans.GraftExtensions]] rules and SQL functions,
+  * shuffle parallelism sized for the
   * actual cluster (32 local threads here; on a real cluster this is set per
   * deployment, with AQE coalescing doing the fine-tuning at runtime).
   */
@@ -32,8 +34,9 @@ object GraftSession {
     s
   }
 
-  /** Apply the configs a caller-supplied session must carry (Verify/Bench
-    * build their own sessions per the driver contract). */
+  /** Apply the configs a session must carry beyond its builder's — also
+    * to a session the engine did not build (every table read calls it,
+    * [[Tables]]). */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set(NanosAsLong, "true")
     registerUdafs(spark)

@@ -8,7 +8,7 @@ import graft.functions.{Interp, Seawater, Teos10}
   * so compiled code carries straight into query execution; without this a
   * single-shot query pays interpreter/C1 cost for the spline and TEOS-10
   * polynomials (observed 2-3x on the atlas pipeline's first run, and a
-  * cold-vs-warm ProbeAtlas gap of 15.7 s vs 3.6 s on climEAPE T25).
+  * measured cold-vs-warm gap of 15.7 s vs 3.6 s on climEAPE T25).
   *
   * Must exercise the PRODUCTION EOS ([[Teos10]]) — warming the gammat
   * bisection through SimplifiedEos compiles a different rhoInP closure and

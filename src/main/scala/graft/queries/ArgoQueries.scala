@@ -17,9 +17,6 @@ import graft.argo.{Atlas, AtlasSink, Interpolator, SummaryBuilder}
   * ArgoPipelineSpec's analytic-field oracle.
   */
 object ArgoQueries extends QueryModule {
-  /** Deterministic raw per-profile metadata from orders. */
-  private[graft] def rawHeaderProbe(s: SparkSession, d: String): DataFrame = rawHeader(s, d)
-  private[graft] def samplesProbe(summary: DataFrame): DataFrame = samples(summary)
   private[graft] def profilesProbe(s: SparkSession, d: String): DataFrame = pipeline(s, d)
 
   /** One persisted summary per (session, dir). */
@@ -121,6 +118,7 @@ object ArgoQueries extends QueryModule {
     climCache.getOrElseUpdate(s, d)(
       ExportAtlas.finalizeTS(tsCellsCached(s, d)).filter(lit(true)).persist())
 
+  /** Deterministic raw per-profile metadata from orders. */
   private def rawHeader(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d)
       .filter(col("o_orderkey") % 10 === 0)
@@ -297,7 +295,7 @@ object ArgoQueries extends QueryModule {
       // packs ~one small file per task under the 4 MB open-cost rule), and
       // the map side carries the whole pair fan-out + partial aggregation
       // — with 2 files/batch those ran on 2 of 32 cores and addBatch
-      // measured ~2.5 s/batch (ProbeQ108); at 32 files/batch the same
+      // measured ~2.5 s/batch (SCALING.md); at 32 files/batch the same
       // work spreads across the machine, the exact shape an incremental
       // GDAC sync has at scale (a sync lands many files, not two).
       profiles.repartition(64).write.mode("overwrite")

@@ -177,11 +177,6 @@ object EmbeddingQueries extends QueryModule {
   private def memoModel[T <: AnyRef](d: String, tag: String)(build: => T): T =
     modelMemo.getOrElseUpdate((d, tag), build).asInstanceOf[T]
 
-  /** Measurement access for tools/ProbeScale10 (stage attribution). */
-  private[graft] def planeThresholdsProbe(s: SparkSession, d: String,
-                                          bits: Int): Seq[Double] =
-    planeThresholds(s, d, bits)
-
   private def planeThresholds(s: SparkSession, d: String, bits: Int): Seq[Double] =
     threshMemo.getOrElseUpdate((d, bits), {
       val mu = Tables.embeddings(s, d)

@@ -2580,7 +2580,7 @@ object TextQueries extends QueryModule {
       case Some(table) =>
         // NO session materialization — each consumer subtree plans its
         // own bucketed scan. Measured against both cache forms on the
-        // REGISTERED queries (tools/ProbeTermStore, sf0.1): scan-only
+        // REGISTERED queries (SCALING.md, sf0.1): scan-only
         // q97 min 1.78 s vs persist(table) 3.64 s, bucket-pinned persist
         // 3.00 s, cold rebuild 2.48 s. The round-9 persist LOST to the
         // cold rebuild because every one of the ~16 consumer references
@@ -2729,7 +2729,7 @@ object TextQueries extends QueryModule {
     // and every BROADCAST build re-executed the dfreq aggregation +
     // two-tier join single-threaded on the driver (the q43 candidate-tier
     // disease). Same width class as the fwdMemo checkpoint it derives
-    // from. The STORE path stays scan-only by design (ProbeTermStore:
+    // from. The STORE path stays scan-only by design (SCALING.md:
     // scan-only 1.78 s beat every persist form; the df sidecars already
     // make each consumer's subtree a vocabulary-sized read).
     if (termStoreTable(s, d).isEmpty)
@@ -2980,10 +2980,6 @@ object TextQueries extends QueryModule {
     * at one row, so per-key fan-out is ≤ df² ≤ 256 ROWS, period; a
     * repeated window's other alignments are recovered by the in-row
     * extension whenever any other anchor proposes their delta. */
-  /** Measurement access for tools/ProbeScale10 (stage attribution). */
-  private[graft] def substringAnchorsProbe(s: SparkSession, d: String): DataFrame =
-    substringAnchors(s, d)
-
   /** Compiled twin of the anchor construction (the genArraysUdf/dotJvm
     * discipline, r14): ONE pass per document — sliding window string via
     * a reused builder, MessageDigest MD5, lowercase hex, the 1-in-4
