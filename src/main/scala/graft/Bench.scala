@@ -1,5 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+import graft.queries.SessionMemo
+
 object Bench {
   /** Land the ~10× blown-up rehearsal corpus (documents + embeddings)
     * in a fresh temp dir and return it. Replicas are near-dup PERTURBED,
@@ -384,10 +387,10 @@ object Bench {
         * the blocks and the memos they back; each memo's rebuild lands in
         * its next consumer's rep 1; the published min-of-reps keeps the
         * warm rep, so per-query walls are unchanged — only the suite wall
-        * pays. The disk-backed q129 layout stays warm. */
+        * pays. */
       def stateBarrier(): Unit = {
         val (before, rddBefore) = (storageMB(), rddMB())
-        graft.queries.SessionMemo.reset(spark)
+        SessionMemo.reset(spark)
         System.err.println(s"[bench] state barrier: storage $before MB" +
           s" -> ${storageMB()} MB, rdd blocks $rddBefore MB -> ${rddMB()} MB")
       }
@@ -511,7 +514,6 @@ object Bench {
     // "qNN" prefix (every query name starts with a unique qNN; the contract
     // example uses {"q1":sec} short keys), which keeps the whole line
     // ~1.2 KB — fully inside the tail window with room to spare.
-    def r3(x: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, x)
     // per-query seconds at TWO decimals: 104 queries × 1 saved char buys
     // ~100 chars of tail-window margin (the full line measured 1642 of
     // the driver's 2000-char tail; r03 was lost to exactly this), and
@@ -696,7 +698,7 @@ object Bench {
         // reads only the scale10 dir (its memos build fresh), and the
         // LATER stores stage — which does revisit sfDir — runs its own
         // reset first, by design, not by trusting this one to have run.
-        graft.queries.SessionMemo.reset(spark)
+        SessionMemo.reset(spark)
         val (buildSec, dir) = clock(buildScale10(spark, sfDir))
         System.err.println(f"[bench] scale10 build           $buildSec%8.2f s")
         sample() // witness between the build and the first member
@@ -873,18 +875,13 @@ object Bench {
         // an at-rest store amortizes away, and the warm main-loop numbers
         // structurally EXCLUDE it (min-of-reps keeps the rep where the
         // memo is already built). Cold state is forced the scale10 way
-        // (SessionMemo.reset) plus the q129 layout dirs, and the cold runs
-        // go FIRST so the store build's own leftover state never pollutes
-        // them.
+        // (SessionMemo.reset), and the cold runs go FIRST so the store
+        // build's own leftover state never pollutes them.
         // min-of-reps like every other published number (a single cold
         // sample carries the full host-burst exposure the 0.4 s re-run
         // threshold exists for — one inflated sample would overstate the
         // advertised cold-to-store win). Each rep re-forces cold state, so
         // rep 2 is a genuine second COLD measurement, not a warm one.
-        def forceCold(): Unit = {
-          graft.queries.SessionMemo.reset(spark)
-          graft.queries.RelationalQueries.reclaimLayoutDirs()
-        }
         // q78 joins the pair in round 10: the PQ sidecar landed in r9 with
         // spec parity but no measured seconds — this publishes the cold
         // in-query encode against the at-rest codes read (VERDICT r9
@@ -900,7 +897,7 @@ object Bench {
         // q128 too: its corpus side reads the DocStore fp column at rest
         // (cold = recompute every corpus fingerprint per ingest check)
         // q129 joins in round 12 (events Z-store): cold pays the full
-        // per-session layout rewrite (forceCold clears its memo), the
+        // per-session layout rewrite (the reset deletes it), the
         // store path scans the once-per-ingest landing
         // A failed cold baseline is logged and its key omitted, so no
         // consumer silently compares the store path against a bogus
@@ -910,7 +907,8 @@ object Bench {
           "q127_video_neardup_hamming", "q34_minhash_lsh",
           "q128_bloom_ingest", "q129_zorder_scan").flatMap { name =>
           val q = short(name)
-          val b = best(s"stores $q cold", reps, before = forceCold())(
+          val b = best(s"stores $q cold", reps,
+              before = SessionMemo.reset(spark))(
             SparkEntry.queries(name)(spark, sfDir).count())
           sample() // in-window witness after every cold member
           b.map { case (dt, _) =>
@@ -918,7 +916,7 @@ object Bench {
             s"${q}_cold" -> dt
           }
         }
-        // the store build below starts from the last forceCold()'s state
+        // the store build below starts from the last reset's state
         // per-store build attribution (the once-per-ingest price each
         // family's per-session savings amortize — published split so a
         // total-build swing is attributable: r10's TermStore sidecars
@@ -1059,7 +1057,8 @@ object Bench {
               graft.sources.TermStore.loadBucketed(spark, "bench_termstore")
                 .agg(sum(col("tf"))).head().getLong(0))
             fwd <- withConfs(spark, Seq("spark.graft.termStore" -> None)) {
-              best("stores q97 index rebuild", reps, before = forceCold())(
+              best("stores q97 index rebuild", reps,
+                  before = SessionMemo.reset(spark))(
                 graft.queries.TextQueries.forwardIndexProbe(spark, sfDir).count())
             }.map(_._1)
           } yield {

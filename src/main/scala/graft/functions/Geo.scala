@@ -27,23 +27,9 @@ object Geo {
   def haversineKm(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column =
     lit(2 * EarthRadiusKm) * asin(sqrt(haversineArg(lon1, lat1, lon2, lat2)))
 
-  /** Equirectangular approximation in degrees², valid for small separations
-    * (atlas.py:75-80). Pure arithmetic — bit-reproducible across engines. */
-  def approxDist2Deg(lon1: Column, lat1: Column, lon2: Column, lat2: Column,
-                     cosLat: Column): Column = {
-    val dlat = lat2 - lat1
-    val dlon = (lon2 - lon1) * cosLat
-    dlat * dlat + dlon * dlon
-  }
-
   /** Gaussian kernel weight exp(-d) used by the reference's weighted means
     * (atlas.py:104-108); `d` is in haversine-arg space, NOT km. */
   def gaussianWeight(havArg: Column, scale: Column): Column = exp(-havArg * scale)
-
-  /** Rational kernel 1/(1+d²) — same qualitative falloff as the Gaussian
-    * but built from IEEE-exact ops only, so weighted means computed with it
-    * are reproducible bit-for-bit across engines (used by verified queries). */
-  def rationalWeight(dist2: Column): Column = lit(1.0) / (lit(1.0) + dist2)
 
   /** Spatial bin index for the binned neighborhood join: floor((v - lo)/w).
     * Profiles get ONE bin; the (small) grid side explodes to all bins within
@@ -51,7 +37,4 @@ object Geo {
     * (atlas.py:268-307) into a broadcast hash equi-join. */
   def binIndex(v: Column, lo: Double, width: Double): Column =
     floor((v - lit(lo)) / lit(width)).cast("long")
-
-  /** Pack a (lonBin, latBin) pair into one join key. */
-  def binKey(lonBin: Column, latBin: Column): Column = lonBin * 1000L + latBin
 }

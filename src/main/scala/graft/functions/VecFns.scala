@@ -88,15 +88,6 @@ object VecFns {
       s"CAST($vec[i] AS DOUBLE) * ($signs)[i])), (acc, x) -> acc + x)"
   }
 
-  /** Random-hyperplane LSH bucket: `bits` sign bits packed into a long.
-    * Collision probability rises with cosine similarity — the standard
-    * SimHash-for-vectors scheme. At scale this turns all-pairs similarity
-    * into an equi-join on bucket. */
-  def lshBucket(vec: Column, bits: Int, n: Int): Column =
-    (0 until bits).map(p =>
-      when(planeProj(vec, p, n) > 0, lit(1L << p)).otherwise(lit(0L)))
-      .reduce(_ + _)
-
   /** Identity over a bucket value, marked non-deterministic — which it is
     * NOT (it forwards its argument bit-for-bit; fixtures and oracles are
     * unaffected). The marker exists purely to stop constraint propagation
@@ -112,11 +103,6 @@ object VecFns {
     val u = udf((b: Long) => b).asNondeterministic()
     u(_)
   }
-
-  def sqlLshBucket(vec: String, bits: Int, n: Int): String =
-    (0 until bits).map(p =>
-      s"CASE WHEN ${sqlPlaneProj(vec, p, n)} > 0 THEN ${1L << p} ELSE 0 END")
-      .mkString("(", " + ", ")")
 
   /** CENTERED sign-LSH: bit p is sign(h_p·v − h_p·μ) — the hyperplanes
     * pass through the corpus mean, not the origin. Uncentered sign-LSH

@@ -174,7 +174,7 @@ object Bpe {
     var exhausted = false
     // symbolizations evolve incrementally: replay only the NEWEST merge
     // on each word instead of all merges from scratch every round
-    var syms: Array[Array[String]] =
+    val syms: Array[Array[String]] =
       words.map { case (w, _) => symbolize(w, Nil) }
     while (step < nMerges && !exhausted) {
       val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]

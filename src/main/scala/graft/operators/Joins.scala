@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Join-strategy helpers for the pair-generation joins in the dedup /
@@ -54,13 +54,15 @@ object Joins {
     df.repartition(
       df.sparkSession.sessionState.conf.numShufflePartitions, cols: _*)
 
-  private val counts = scala.collection.concurrent.TrieMap.empty[String, Long]
+  private[graft] val counts = new graft.queries.SessionMemo[Long]
 
-  /** Row count for a join-strategy decision, memoized per stable key (e.g.
-    * table path): the decision needs the size BEFORE planning, but it must
-    * not cost one counting job per query invocation / bench repetition. */
-  def memoCount(key: String, df: => DataFrame): Long =
-    counts.getOrElseUpdate(key, df.count())
+  /** Row count for a join-strategy decision, memoized per (session, key)
+    * (e.g. table path): the decision needs the size BEFORE planning, but
+    * it must not cost one counting job per query invocation / bench
+    * repetition. `s` is the session `df` belongs to; taking it apart
+    * keeps `df` unbuilt on a hit. */
+  def memoCount(s: SparkSession, key: String)(df: => DataFrame): Long =
+    counts.getOrElseUpdate(s, key)(df.count())
 
   /** Self-join on a LOW-CARDINALITY block key (LSH bucket, source block):
     * the degenerate case of a pair-generation join, where a plain shuffle

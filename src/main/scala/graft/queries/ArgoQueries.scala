@@ -188,11 +188,9 @@ object ArgoQueries extends QueryModule {
     * interpolated memo. ArgoPipelineSpec pins plan + parity on the
     * registered query. */
   private def atlasProfiles(s: SparkSession, d: String): DataFrame =
-    s.conf.get("spark.graft.atlasStore", "").split("=", 2) match {
-      case Array(dir, table) if dir == d && s.catalog.tableExists(table) =>
-        graft.argo.AtlasStore.loadBucketed(s, table)
-      case _ => pipelineCached(s, d)
-    }
+    graft.sources.Stores.boundTo(s, "spark.graft.atlasStore", d)
+      .filter(s.catalog.tableExists(_))
+      .fold(pipelineCached(s, d))(graft.argo.AtlasStore.loadBucketed(s, _))
 
   private def q71(s: SparkSession, d: String): DataFrame = {
     val profiles = atlasProfiles(s, d)
@@ -318,18 +316,13 @@ object ArgoQueries extends QueryModule {
     // streaming STATE partitioning is fixed at query start from
     // spark.sql.shuffle.partitions; the state here is grid-bounded
     // (~5k cells), so 32 partitions just multiply the per-batch state
-    // store commit overhead ×4 for no parallelism gain — default 8 for
-    // the stream, restore the session's setting after. Conf-sized, not
-    // hardcoded: a deployment maintaining a global fine grid (10⁶+ cell
-    // state rows) raises it with the grid the way it sizes any state
-    // store (state partitioning is FROZEN into the checkpoint at first
-    // start, so it must be set before the stream ever runs).
-    val statePartitions =
-      s.conf.get("spark.graft.streamStatePartitions", "8")
+    // store commit overhead ×4 for no parallelism gain — 8 for the
+    // stream, restore the session's setting after (state partitioning is
+    // FROZEN into the checkpoint at first start).
     val ckpt = graft.TempDirs.create("graft-stream-ckpt")
     val prior = s.conf.get("spark.sql.shuffle.partitions")
     val q = try {
-      s.conf.set("spark.sql.shuffle.partitions", statePartitions)
+      s.conf.set("spark.sql.shuffle.partitions", "8")
       Atlas.aggTS(ExportAtlas.pairs(s, sdf))
         .writeStream.format("memory").queryName(qn).outputMode("complete")
         .option("checkpointLocation", ckpt.toString)

@@ -23,44 +23,6 @@ import graft.operators.{Aggregates, Joins, KMeans, Pca}
 object EmbeddingQueries extends QueryModule {
   private val Dim = 64
 
-  /** Deployment density (bits per LSH table) as a PROCESS-LEVEL setting —
-    * the one knob the oracle can follow. The engine reads the session conf
-    * `spark.graft.nearDupBits` per query; the SQL oracles are strings baked
-    * at class init, so a runtime `conf.set` can never reach them (the
-    * KNOB ⟂ GATE caveat). Setting the knob at JVM launch instead — system
-    * property `-Dspark.graft.nearDupBits=8` or env
-    * `SPARK_GRAFT_NEARDUP_BITS=8` (sbt forks, so both propagate) — feeds
-    * BOTH sides: it becomes the engine's conf default AND the bit width
-    * the q41/q43/q67 oracle CTEs are generated with, so the deployment
-    * density carries a full rows+schema+hash CORRECTNESS row instead of a
-    * README caveat. Unset (the driver's gate), everything stays at the
-    * committed defaults. */
-  private[graft] val ConfiguredNearDupBits: Option[Int] =
-    sys.props.get("spark.graft.nearDupBits")
-      .orElse(sys.env.get("SPARK_GRAFT_NEARDUP_BITS"))
-      .map { v =>
-        // a bare toInt here would surface as an opaque
-        // ExceptionInInitializerError on the first touch of this object —
-        // name the knob so a malformed launch value is debuggable
-        val b =
-          try v.trim.toInt
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              "spark.graft.nearDupBits / SPARK_GRAFT_NEARDUP_BITS must be " +
-                s"an integer, got '$v'")
-          }
-        // range-check here, at the knob, for the same debuggability
-        // reason as the parse: 0 bits makes every vector hash to ONE
-        // bucket per table (quadratic candidates — the gate hangs rather
-        // than fails fast), negatives feed garbage shift counts into the
-        // bucketers, and past ~16 bits/table a near-neighbor must agree
-        // on every sign (recall → 0, and the generated oracle CTEs grow
-        // a projection term per plane) — sanity-bound, not a format limit
-        require(b >= 1 && b <= 16,
-          "spark.graft.nearDupBits / SPARK_GRAFT_NEARDUP_BITS must be " +
-            s"in 1..16, got $b")
-        b
-      }
   private val ProbeMod = 50 // vec_id % ProbeMod == 0 → probe set
   // Fixed probe-set bound (the q97/q87 discipline): a bare modulus makes
   // every probe side a corpus FRACTION, so probes × corpus fan-outs grow
@@ -149,36 +111,28 @@ object EmbeddingQueries extends QueryModule {
     * truncating integer division — every step engine-exact (DuckDB's `//`
     * and Spark's `div` both truncate toward zero), so the oracle computes
     * bit-identical thresholds and therefore identical buckets. Memoized
-    * per (dir, bits): the three bucket consumers per suite run share one
-    * tiny aggregation. Same stable-key contract as [[Joins.memoCount]]:
-    * the path is assumed to name immutable data — re-landing DIFFERENT
-    * vectors at the same path within one JVM would serve stale
-    * thresholds (every writer in this repo lands new corpora in fresh
-    * temp dirs). */
-  private val threshMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[Double]]
+    * per (session, dir#bits): the three bucket consumers share one tiny
+    * aggregation. */
+  private[graft] val threshMemo = new SessionMemo[Seq[Double]]
 
   /** Driver-held TRAINED models (k-means cells, PQ codebooks, PCA
-    * components) memoized per (corpusDir, tag) — the [[threshMemo]]
-    * contract extended to the trainers, and the deployment shape: an
-    * index's quantizer is fit once per ingest and persisted beside the
-    * store, not retrained per query (every fit here is deterministic —
-    * id-stride init, fixed-point sums — so a memo hit IS the retrain,
-    * bit for bit; golden fixtures are unaffected). Bounded like the
-    * other driver models: cells × dim doubles, KBs per corpus. Same
-    * stable-key assumption: a path names immutable data (every writer
-    * in this repo lands new corpora in fresh temp dirs). Tags keep
-    * deliberately distinct fits apart — q99's pinned-distributed PCA
-    * fit must never be served q107's adaptive one, or the pin would
-    * stop exercising the distributed branch under the gate. */
-  private val modelMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), AnyRef]
+    * components) per (session, corpusDir#tag): an index's quantizer is
+    * fit once per ingest and persisted beside the store, not retrained
+    * per query (every fit here is deterministic — id-stride init,
+    * fixed-point sums — so a memo hit IS the retrain, bit for bit).
+    * Bounded like the other driver models: cells × dim doubles, KBs per
+    * corpus. Tags keep deliberately distinct fits apart — q99's
+    * pinned-distributed PCA fit must never be served q107's adaptive
+    * one, or the pin would stop exercising the distributed branch under
+    * the gate. */
+  private val modelMemo = new SessionMemo[AnyRef]
 
-  private def memoModel[T <: AnyRef](d: String, tag: String)(build: => T): T =
-    modelMemo.getOrElseUpdate((d, tag), build).asInstanceOf[T]
+  private def memoModel[T <: AnyRef](s: SparkSession, d: String, tag: String)(
+      build: => T): T =
+    modelMemo.getOrElseUpdate(s, s"$d#$tag")(build).asInstanceOf[T]
 
   private def planeThresholds(s: SparkSession, d: String, bits: Int): Seq[Double] =
-    threshMemo.getOrElseUpdate((d, bits), {
+    threshMemo.getOrElseUpdate(s, s"$d#$bits") {
       val mu = Tables.embeddings(s, d)
         .select(posexplode(col("embedding")))
         .select((col("pos") + 1).as("dm"),
@@ -191,7 +145,7 @@ object EmbeddingQueries extends QueryModule {
       val row = mu.agg(cols.head, cols.tail: _*).head()
       (0 until bits).map(p =>
         if (row.isNullAt(p)) 0.0 else row.getLong(p) / 1e9)
-    })
+    }
 
   /** Oracle twin of [[planeThresholds]]: CTEs `mu` (per-dim nano mean)
     * and `th` (the per-plane threshold list `ts`, 1-based). */
@@ -236,12 +190,9 @@ object EmbeddingQueries extends QueryModule {
   private def q41Split(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     // bits per table rides the same density knob as the near-dup family —
     // candidates/bucket ≈ n/2^bits per table, so a denser corpus raises it
-    // (the scale10 stage runs 8). Set at JVM launch
-    // ([[ConfiguredNearDupBits]]) the oracle CTEs follow and the setting
-    // is gate-verified; a runtime conf.set reaches only the engine and is
-    // a PERF configuration (the baked SQL cannot follow it).
-    val bits = s.conf.get("spark.graft.nearDupBits",
-      ConfiguredNearDupBits.getOrElse(LshTableBits).toString).toInt
+    // (the scale10 stage runs 8). The oracle CTEs are baked at
+    // LshTableBits, so another width is a PERF configuration.
+    val bits = s.conf.get("spark.graft.nearDupBits", LshTableBits.toString).toInt
     val th = planeThresholds(s, d, LshTables * bits)
     val raw = vecs(s, d).select(
       col("vec_id"),
@@ -299,9 +250,7 @@ object EmbeddingQueries extends QueryModule {
   }
 
   private val q41Sql = {
-    // oracle bit width follows the process-level knob (ConfiguredNearDupBits)
-    // so a launch-time density setting is verified end to end
-    val bits = ConfiguredNearDupBits.getOrElse(LshTableBits)
+    val bits = LshTableBits
     val bands = (0 until LshTables).map(t =>
       s"  SELECT vec_id, $t AS tbl, ${V.sqlLshBucketCentered("embedding",
         bits, Dim, "ts", t * bits)} AS bucket " +
@@ -367,8 +316,8 @@ object EmbeddingQueries extends QueryModule {
   // intra-bucket pairs are scored — the same LSH-blocking shape as q34's
   // MinHash bands. The bucket self-join shuffles each side once on the
   // bucket key; no row ever meets more than its own bucket.
-  private val NearDupBits = 4
-  private val NearDupTables = 4
+  private[graft] val NearDupBits = 4
+  private[graft] val NearDupTables = 4
   private val NearDupThreshNano = 350000000L // cosine ≥ 0.35
 
   /** Estimated IN-MEMORY bytes per pv-model row: 8·Dim packed doubles +
@@ -417,16 +366,10 @@ object EmbeddingQueries extends QueryModule {
     // n at fixed bits; the scale10 stage measured 170 s at 10× on 4 bits
     // vs ~7 s on 8). A deployment raises it with the corpus the way it
     // raises IVF cells.
-    // KNOB ⟂ GATE, closed at JVM scope: the q43/q67 SQL oracles are baked
-    // at class init from [[ConfiguredNearDupBits]] — set the knob at JVM
-    // launch (-Dspark.graft.nearDupBits=8 / SPARK_GRAFT_NEARDUP_BITS=8)
-    // and BOTH the engine default and the oracle CTEs run that width, so
-    // the deployment density carries its own green CORRECTNESS row.
-    // A runtime conf.set still reaches only the engine (the baked SQL
-    // cannot follow it): that remains a PERF configuration — running the
-    // gate that way reports spurious candidate-set mismatches.
-    val bits = s.conf.get("spark.graft.nearDupBits",
-      ConfiguredNearDupBits.getOrElse(NearDupBits).toString).toInt
+    // KNOB ⟂ GATE: the q43/q67 SQL oracles are baked at NearDupBits, so
+    // another width is a PERF configuration — running the gate that way
+    // reports spurious candidate-set mismatches.
+    val bits = s.conf.get("spark.graft.nearDupBits", NearDupBits.toString).toInt
     val th = planeThresholds(s, d, NearDupTables * bits)
     val base = vecs(s, d).select(
       col("vec_id"),
@@ -471,7 +414,7 @@ object EmbeddingQueries extends QueryModule {
     // With few coarse buckets a shuffle join would collapse onto
     // ≤T·2^bits tasks. Size-conditional (Joins.blockJoin): broadcast the
     // build side while it fits, salted equi-join past the cap.
-    val nVecs = Joins.memoCount(s"$d/embeddings", Tables.embeddings(s, d))
+    val nVecs = Joins.memoCount(s, s"$d/embeddings")(Tables.embeddings(s, d))
     val cand = Joins.blockJoin(l, r, Seq("bucket", "tbl"), hash(col("d1")),
         buildRows = nVecs * NearDupTables)
       .filter(col("d1") < col("d2"))
@@ -486,9 +429,8 @@ object EmbeddingQueries extends QueryModule {
     // narrow map). The cap is BYTE-AWARE (r15): rows × in-memory row
     // width (packed vector + norm + map-entry overhead) against the
     // shared byte budget — the row cap alone admitted a ~1 GB map at its
-    // 2M default. The model itself is session-scoped ([[pvModelMemo]]):
-    // raw corpus payload, rebuilt from parquet after every bench barrier,
-    // never the JVM-wide trained-model memo it used to hide in.
+    // 2M default. The model itself is a session-scoped broadcast
+    // ([[pvModelMemo]]), rebuilt from parquet after every bench barrier.
     // Bit-identity: the SAME packed bytes (V.packVec), the SAME fold
     // (DotPackedExpr.dot — the codegen kernel the join path calls), the
     // same (n1·n2) product order and FP.nano rounding; NearDupScoreSpec
@@ -533,11 +475,10 @@ object EmbeddingQueries extends QueryModule {
   private def q43(s: SparkSession, d: String): DataFrame =
     nearDupPairs(s, d).orderBy("d1", "d2")
 
-  /** Bucket + scored-pair CTEs shared by the q43 and q67 oracles — bit
-    * width from the process-level knob ([[ConfiguredNearDupBits]]) so a
-    * launch-time density setting is oracle-verified, default otherwise. */
+  /** Bucket + scored-pair CTEs shared by the q43 and q67 oracles, at
+    * the default width [[NearDupBits]]. */
   private val nearDupPairCtes = {
-    val bits = ConfiguredNearDupBits.getOrElse(NearDupBits)
+    val bits = NearDupBits
     val bands = (0 until NearDupTables).map(t =>
       s"  SELECT vec_id, $t AS tbl, ${V.sqlLshBucketCentered("embedding",
         bits, Dim, "ts", t * bits)} AS bucket " +
@@ -1010,14 +951,10 @@ object EmbeddingQueries extends QueryModule {
   private val pqCodeMemo = new SessionMemo[DataFrame]
 
   /** The near-dup scoring model — (vec_id → packed vector, norm) held in
-    * a Spark BROADCAST per (session, corpus): session-scoped raw corpus
-    * payload, NOT a trained model, so it must not live in the JVM-wide
-    * [[modelMemo]] (r15, VERDICT r14 item 6 + advice: the modelMemo copy
-    * both survived the bench's cold barriers — making stores-stage "cold"
-    * q43 warm on the scoring side — and rode every scoring task's closure
-    * as a never-evicted ~corpus-sized HashMap). A broadcast ships once
-    * per executor instead of per task closure; [[SessionMemo.reset]]
-    * destroys it. */
+    * a Spark BROADCAST per (session, corpus): raw corpus payload, NOT a
+    * trained model, so it ships once per executor instead of riding
+    * every scoring task's closure as a ~corpus-sized HashMap (r15);
+    * [[SessionMemo.reset]] destroys it. */
   private val pvModelMemo =
     new SessionMemo[org.apache.spark.broadcast.Broadcast[
       java.util.HashMap[Long, (Array[Byte], Double)]]]
@@ -1335,7 +1272,7 @@ object EmbeddingQueries extends QueryModule {
     * cell directory key) instead of reading everything. */
   def landVecStore(s: SparkSession, d: String, path: String): Unit = {
     val corpus = vecs(s, d).select(col("vec_id"), col("embedding"))
-    val model = memoModel(d, "ivf")(
+    val model = memoModel(s, d, "ivf")(
       KMeans.fit(corpus, "vec_id", "embedding", Dim, KCells, KmIters))
     graft.sources.VecStore.savePartitioned(corpus, model, path)
     // PQ sidecar beside the vectors (VERDICT r8 task 5): q78's verified
@@ -1351,13 +1288,10 @@ object EmbeddingQueries extends QueryModule {
     // read back from the store's _ivfmodel sidecar when one is wired
     // (doubles round-trip parquet bit-exactly, so the loaded model IS
     // the fitted one — a fresh session runs zero Lloyd iterations),
-    // else fitted and memoized per (dir, tag) like every driver model
-    val storePath = s.conf.get("spark.graft.vecStore", "").split("=", 2) match {
-      case Array(dir, path) if dir == d &&
-          graft.sources.VecStore.storeExists(s, path) =>
-        Some(path)
-      case _ => None
-    }
+    // else fitted and memoized per (session, dir#tag) like every driver
+    // model
+    val storePath = graft.sources.Stores.boundTo(s, "spark.graft.vecStore", d)
+      .filter(graft.sources.VecStore.storeExists(s, _))
     // the sidecar load is NOT memoized: a KB-scale parquet read per
     // invocation is nothing, and a memo keyed on the path would serve a
     // STALE model after a same-session re-train + re-land at the same
@@ -1366,7 +1300,7 @@ object EmbeddingQueries extends QueryModule {
     val model = storePath
       .filter(p => graft.sources.VecStore.hasIvfModel(s, p))
       .map(p => graft.sources.VecStore.loadIvfModel(s, p))
-      .getOrElse(memoModel(d, "ivf")(
+      .getOrElse(memoModel(s, d, "ivf")(
         KMeans.fit(corpus, "vec_id", "embedding", Dim, KCells, KmIters)))
     val norms = model.map(c => math.sqrt(c.map(x => x * x).sum))
     import s.implicits._
@@ -1426,7 +1360,7 @@ object EmbeddingQueries extends QueryModule {
     // aggregate, deterministic, the quantizer a deployment fits once
     // per ingest; re-collecting it per invocation cost one full corpus
     // aggregation job each run
-    val mm = memoModel(d, "sq-minmax")(
+    val mm = memoModel(s, d, "sq-minmax")(
       emb.select(posexplode(col("embedding")).as(Seq("dpos", "x")))
         .groupBy(col("dpos")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
         .collect().map(r => (r.getInt(0), r.getFloat(1).toDouble,
@@ -1534,8 +1468,7 @@ object EmbeddingQueries extends QueryModule {
     * at corpus scale: the candidate set is probes × 100 rows, broadcast
     * back against the corpus, so full vectors are only ever read for
     * candidates. Output distance is the EXACT ‖q − v‖² (micro-rounded). */
-  private def rerankExact(s: SparkSession, emb: DataFrame,
-                          shortlist: DataFrame): DataFrame = {
+  private def rerankExact(emb: DataFrame, shortlist: DataFrame): DataFrame = {
     val l2 = udf((a: Seq[Float], b: Seq[Float]) => {
       var dsum = 0.0
       var i = 0
@@ -1561,7 +1494,7 @@ object EmbeddingQueries extends QueryModule {
 
   private def q69(s: SparkSession, d: String): DataFrame = {
     val emb = vecs(s, d).select(col("vec_id"), col("embedding"))
-    val cb = memoModel(d, "pq")(
+    val cb = memoModel(s, d, "pq")(
       KMeans.fitPq(emb, "vec_id", "embedding", PqM, PqSubDim, PqK, PqIters))
     val encode = udf((v: Seq[Float]) => {
       val code = new Array[Byte](PqM)
@@ -1630,7 +1563,7 @@ object EmbeddingQueries extends QueryModule {
       .withColumn("cand_rank", row_number().over(w))
       .filter(col("cand_rank") <= PqShortlist)
       .select(col("q_id"), col("vec_id"))
-    rerankExact(s, emb, shortlist)
+    rerankExact(emb, shortlist)
   }
 
   // ---- q78: IVF-PQ — coarse cells + PQ on RESIDUALS (the FAISS layout) ---
@@ -1712,13 +1645,13 @@ object EmbeddingQueries extends QueryModule {
       : (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) = {
     val emb = vecs(s, d).select(col("vec_id"), col("embedding"))
     // coarse quantizer: fitPq with one subspace == deterministic L2 Lloyd
-    val coarse = memoModel(d, "ivfpq-coarse")(
+    val coarse = memoModel(s, d, "ivfpq-coarse")(
       KMeans.fitPq(emb, "vec_id", "embedding", 1, Dim, IvfPqCells, PqIters))(0)
     val resid = residFrame(emb, coarse)
     // PQ codebooks on the residuals (float-exactness does not hold for
     // residuals, so fitPq's float cast quantizes at ~1e-7 relative —
     // uniform across partitionings, still bit-deterministic)
-    val books = memoModel(d, "ivfpq-books")(
+    val books = memoModel(s, d, "ivfpq-books")(
       KMeans.fitPq(resid, "vec_id", "resid", PqM, PqSubDim, PqK, PqIters))
     (coarse, books, encodeResid(resid, books))
   }
@@ -1777,15 +1710,11 @@ object EmbeddingQueries extends QueryModule {
     // bit-identical either way (deterministic fits; doubles round-trip
     // parquet exactly) — VecStoreSpec pins parity + plan on this
     // registered query.
-    val stored: Option[String] =
-      s.conf.get("spark.graft.vecStore", "").split("=", 2) match {
-        case Array(dir, p) if dir == d &&
-            graft.sources.VecStore.hasPqSidecar(s, p) => Some(p)
-        case _ => None
-      }
+    val stored = graft.sources.Stores.boundTo(s, "spark.graft.vecStore", d)
+      .filter(graft.sources.VecStore.hasPqSidecar(s, _))
     val (coarse, books, b) = stored match {
       case Some(p) =>
-        val (c, bks) = memoModel(d, s"ivfpq-model@$p")(
+        val (c, bks) = memoModel(s, d, s"ivfpq-model@$p")(
           graft.sources.VecStore.loadPqModel(s, p))
         (c, bks, graft.sources.VecStore.loadPqCodes(s, p)
           .select(col("vec_id"), col("cell"), col("code")))
@@ -1857,7 +1786,7 @@ object EmbeddingQueries extends QueryModule {
       .withColumn("cand_rank", row_number().over(w))
       .filter(col("cand_rank") <= PqShortlist)
       .select(col("q_id"), col("vec_id"))
-    rerankExact(s, emb, shortlist)
+    rerankExact(emb, shortlist)
   }
 
   // ---- q87: semantic decontamination (eval-set cosine containment) -------
@@ -2021,7 +1950,7 @@ object EmbeddingQueries extends QueryModule {
 
   private def q107(s: SparkSession, d: String): DataFrame = {
     val emb = vecs(s, d).select(col("vec_id"), col("embedding"))
-    val model = memoModel(d, "pca")(Pca.fit(emb, "embedding", Dim))
+    val model = memoModel(s, d, "pca")(Pca.fit(emb, "embedding", Dim))
     // compiled twin of the integer reduced-space dot (the dotJvm
     // discipline): exact Long arithmetic, any order identical — the HOF
     // form evaluated interpreted per element, ×3 per crossJoin pair
@@ -2079,7 +2008,7 @@ object EmbeddingQueries extends QueryModule {
     // would never exercise the distributed co-moment aggregation — the
     // branch a 100 TB fit runs. PcaSpec asserts the two paths are
     // bit-identical, so the fixture stays valid for both.
-    val model = memoModel(d, "pca-pinned")(
+    val model = memoModel(s, d, "pca-pinned")(
       Pca.fit(emb, "embedding", Dim, allowDriverFastPath = false))
     Pca.project(emb, model, "embedding", PcaK)
       .select(col("vec_id"), posexplode(col("pc")).as(Seq("comp", "val_u")))

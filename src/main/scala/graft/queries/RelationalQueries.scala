@@ -586,30 +586,16 @@ object RelationalQueries extends QueryModule {
   // rectangle and the time-bucket granule derive from them
   // deterministically in both engines (integer arithmetic on µs).
   //
-  // The rewrite is memoized per corpus dir (the memoModel discipline:
-  // a path names immutable data) so the once-per-ingest layout job runs
-  // once per SESSION too — without the memo every invocation (bench
-  // reps, correctness sweeps) wrote a fresh full copy of events into a
-  // new TempDirs dir that only JVM exit reclaimed. With
-  // `spark.graft.eventsZStore = "<corpusDir>=<path>"` the query serves
-  // the rectangle from an AT-REST z-clustered landing instead
+  // The rewrite is memoized per (session, corpus dir), so the layout
+  // job runs once per session, not once per invocation. The memo holds
+  // the layout's temp dir as a Path, so [[SessionMemo.reset]] deletes
+  // it. With `spark.graft.eventsZStore = "<corpusDir>=<path>"` the query
+  // serves the rectangle from an AT-REST z-clustered landing instead
   // ([[landEventsZStore]] — the store-family shape: rewrite once per
   // ingest, every session scans), bounds read from the `_bounds`
   // sidecar so the store path launches no corpus-wide agg at all.
   private val zorderMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long, Long, Long)]
-
-  /** Forget q129's layout memo and reclaim its written dirs — the
-    * bench's cold hook (a cold rep must pay the rewrite). The layout is
-    * process-wide DISK state, not session state: [[SessionMemo.reset]]
-    * leaves it warm. */
-  private[graft] def reclaimLayoutDirs(): Unit = {
-    zorderMemo.values.foreach { case (dir, _, _, _) =>
-      graft.TempDirs.deleteRec(
-        new java.io.File(dir).getParentFile.getAbsolutePath)
-    }
-    zorderMemo.clear()
-  }
+    new SessionMemo[(java.nio.file.Path, Long, Long, Long)]
 
   private def eventsNormalized(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
@@ -805,8 +791,8 @@ object RelationalQueries extends QueryModule {
     * leaf-less shape hides the scan metric). */
   private[graft] def q129RectangleScan(s: SparkSession, d: String): DataFrame = {
     val (dir, mn, mx, umax, snapshot) =
-      s.conf.get("spark.graft.eventsZStore", "").split("=", 2) match {
-        case Array(cd, path) if cd == d =>
+      graft.sources.Stores.boundTo(s, "spark.graft.eventsZStore", d) match {
+        case Some(path) =>
           // snapshot read (VERDICT r13 task 6): resolve the newest
           // manifest's explicit file list, so a read issued inside a
           // compaction window scans a COMPLETE pre-swap snapshot (the
@@ -821,14 +807,14 @@ object RelationalQueries extends QueryModule {
           val b = s.read.parquet(s"$path/_bounds").head
           (path, b.getAs[Long]("mn"), b.getAs[Long]("mx"),
             b.getAs[Long]("umax"), files)
-        case _ =>
-          val (o, a, b, c) = zorderMemo.getOrElseUpdate(d, {
-            val out = graft.TempDirs.create("graft-zorder")
-              .resolve("events").toString
-            val (mn, mx, umax) = rewriteZOrdered(s, d, out)
-            (out, mn, mx, umax)
-          })
-          (o, a, b, c, None)
+        case None =>
+          val (root, a, b, c) = zorderMemo.getOrElseUpdate(s, d) {
+            val root = graft.TempDirs.create("graft-zorder")
+            val (mn, mx, umax) =
+              rewriteZOrdered(s, d, root.resolve("events").toString)
+            (root, mn, mx, umax)
+          }
+          (root.resolve("events").toString, a, b, c, None)
       }
     val t1 = mn + (mx - mn) / 4
     val t2 = mn + (mx - mn) / 2

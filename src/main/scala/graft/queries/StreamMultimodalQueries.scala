@@ -465,18 +465,15 @@ object StreamMultimodalQueries extends QueryModule {
 
   /** The at-rest MediaStore hash table for corpus `d` and modality
     * `suffix`, if this session points one at it:
-    * `spark.graft.mediaStore = "<corpusDir>=<tablePrefix>"`. The
-    * corpusDir guard keeps a store from silently serving a different
-    * corpus than the one the query names (MediaStoreSpec pins result
-    * parity and that the store path plans NO decode). */
+    * `spark.graft.mediaStore = "<corpusDir>=<tablePrefix>"`
+    * (MediaStoreSpec pins result parity and that the store path plans
+    * NO decode). */
   private def mediaStoreTable(s: SparkSession, d: String,
                               suffix: String): Option[DataFrame] =
-    s.conf.get("spark.graft.mediaStore", "").split("=", 2) match {
-      case Array(dir, prefix) if dir == d &&
-          s.catalog.tableExists(s"${prefix}_$suffix") =>
-        Some(s.table(s"${prefix}_$suffix"))
-      case _ => None
-    }
+    graft.sources.Stores.boundTo(s, "spark.graft.mediaStore", d)
+      .map(prefix => s"${prefix}_$suffix")
+      .filter(s.catalog.tableExists(_))
+      .map(s.table(_))
 
   /** Image perceptual hashes for q118/q120: the at-rest store when the
     * session points at one — plain bucketed scans, ZERO session state

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.functions.{BloomProbeExpr, FP, TextFns => T}
 import graft.operators.{Bpe, Logit, Sketches}
-import graft.sources.DocStore
+import graft.sources.{DocStore, Stores}
 
 /** Training-data text pipeline over the `documents` table: exact and
   * near deduplication (MinHash+LSH, SimHash, n-gram Jaccard), language ID,
@@ -209,11 +209,7 @@ object TextQueries extends QueryModule {
     * any: spark.graft.bandStore = "<corpusDir>=<tableName>" (the
     * termStore/docStore conf discipline, corpusDir guard included). */
   private def bandStoreTable(s: SparkSession, d: String): Option[String] =
-    s.conf.get("spark.graft.bandStore", "").split("=", 2) match {
-      case Array(dir, table) if dir == d && s.catalog.tableExists(table) =>
-        Some(table)
-      case _ => None
-    }
+    Stores.boundTo(s, "spark.graft.bandStore", d).filter(s.catalog.tableExists(_))
 
   /** The corpus band table every near-dup pass starts from: the at-rest
     * BandStore when wired — a (band, key)-bucketed scan replaces the
@@ -414,6 +410,10 @@ object TextQueries extends QueryModule {
   private val IngestMod = 10L
   private val IngestRem = 7L
 
+  /** The DocStore table bound to `d` by spark.graft.docStore, if landed. */
+  private def docStoreTable(s: SparkSession, d: String): Option[String] =
+    Stores.boundTo(s, "spark.graft.docStore", d).filter(s.catalog.tableExists(_))
+
   /** The non-batch corpus side's (doc_id, fp) frame — the at-rest
     * DocStore when wired (the store carries the verified fp expression
     * via DocStore.fingerprint), else computed in-session. ONE resolver
@@ -421,12 +421,12 @@ object TextQueries extends QueryModule {
     * ingest surfaces can never diverge on the corpus side (the
     * corpusBands discipline applied to the fingerprint frame). */
   private def corpusFp(s: SparkSession, d: String): DataFrame =
-    s.conf.get("spark.graft.docStore", "").split("=", 2) match {
-      case Array(dir, table) if dir == d && s.catalog.tableExists(table) =>
+    docStoreTable(s, d) match {
+      case Some(table) =>
         graft.sources.DocStore.loadBucketed(s, table)
           .filter(col("doc_id") % IngestMod =!= IngestRem)
           .select(col("doc_id"), col("fp"))
-      case _ => docs(s, d).filter(col("doc_id") % IngestMod =!= IngestRem)
+      case None => docs(s, d).filter(col("doc_id") % IngestMod =!= IngestRem)
         .select(col("doc_id"), DocStore.fpExpr(s, col("text")).as("fp"))
     }
 
@@ -483,18 +483,14 @@ object TextQueries extends QueryModule {
         // the two sizing counts run ONLY on the auto branch — a session
         // that pins the branch must not pay counting jobs for a
         // decision it has already made.
-        // memoCount is PROCESS-LIFETIME, keyed by path (r13 advice):
-        // fine under this repo's immutable-path contract (a testdata dir
-        // never grows), but a long-lived session ingesting into a FIXED
-        // corpus path would keep serving the landing-time ratio and
-        // never re-engage the Bloom past the crossover — a deployment
-        // with growing stores should key the memo on store generation
-        // (the manifest version, Stores.latestManifest) or pin the
+        // the counts are memoized per (session, path) until
+        // SessionMemo.reset: a session that grows a FIXED corpus path
+        // keeps the landing-time ratio until it resets or pins the
         // branch with spark.graft.nearBloom=on
-        val nCorpus = graft.operators.Joins.memoCount(
-          s"$d/documents!corpus", docs(s, d).filter(!isBatch))
-        val nBatch = math.max(1L, graft.operators.Joins.memoCount(
-          s"$d/documents!batch", docs(s, d).filter(isBatch)))
+        val nCorpus = graft.operators.Joins.memoCount(s,
+          s"$d/documents!corpus")(docs(s, d).filter(!isBatch))
+        val nBatch = math.max(1L, graft.operators.Joins.memoCount(s,
+          s"$d/documents!batch")(docs(s, d).filter(isBatch)))
         nCorpus >=
           s.conf.get("spark.graft.nearBloomMinRatio", "32").toLong * nBatch
     }
@@ -510,9 +506,8 @@ object TextQueries extends QueryModule {
     val cBandsAll = corpusBands(s, d)
       .filter(col("doc_id") % IngestMod =!= IngestRem)
     val cBands = (if (!probeOn) cBandsAll else {
-      val mBits = s.conf.get("spark.graft.bloomBits", (1 << 20).toString).toInt
       val bandBloom = bBands
-        .agg(Sketches.bloomFilter(mBits, BloomK)(xxhash64(col("band"), col("key"))))
+        .agg(Sketches.bloomFilter(BloomBits, BloomK)(xxhash64(col("band"), col("key"))))
         .head.getAs[Array[Byte]](0)
       cBandsAll.filter(BloomProbeExpr.bloomMightContain(lit(bandBloom),
         xxhash64(col("band"), col("key")), BloomK))
@@ -612,11 +607,11 @@ object TextQueries extends QueryModule {
   // ratio, and result-equality against the unpruned path). Intra-batch
   // copies are q110's job; this is the batch-vs-corpus verdict.
   //
-  // Sizing: m defaults to 2^20 bits (128 KB literal) ≈ 16 bits/element up
-  // to a 65k-doc batch — fp rate ~1e-3 at k=5; a deployment sizes it from
-  // the ingest batch bound via spark.graft.bloomBits. With
-  // spark.graft.docStore wired the corpus side reads its precomputed fp
-  // at rest (the q110/q37 discipline), so the prune scans one long column.
+  // Sizing: m = 2^20 bits (128 KB literal) ≈ 16 bits/element up to a
+  // 65k-doc batch — fp rate ~1e-3 at k=5. With spark.graft.docStore
+  // wired the corpus side reads its precomputed fp at rest (the q110/q37
+  // discipline), so the prune scans one long column.
+  private val BloomBits = 1 << 20
   private val BloomK = 5
 
   private def ingestBatchFp(s: SparkSession, d: String): DataFrame =
@@ -628,12 +623,11 @@ object TextQueries extends QueryModule {
     * `q128cand` by the scale10 stage so the prune ratio is attributable
     * from the artifact). */
   private[graft] def bloomSurvivors(s: SparkSession, d: String): DataFrame = {
-    val mBits = s.conf.get("spark.graft.bloomBits", (1 << 20).toString).toInt
     // one tiny job over the batch; the filter is a bounded driver model
-    // (m/8 bytes, 128 KB at the default) — the runtime-filter shape of
-    // Spark's own InSubqueryExec results
+    // (m/8 bytes, 128 KB) — the runtime-filter shape of Spark's own
+    // InSubqueryExec results
     val bloom = ingestBatchFp(s, d)
-      .agg(Sketches.bloomFilter(mBits, BloomK)(col("fp")))
+      .agg(Sketches.bloomFilter(BloomBits, BloomK)(col("fp")))
       .head.getAs[Array[Byte]](0)
     corpusFp(s, d).filter(
       BloomProbeExpr.bloomMightContain(lit(bloom), col("fp"), BloomK))
@@ -1049,11 +1043,11 @@ object TextQueries extends QueryModule {
     // NO exchange at all (DocStoreSpec pins plan + parity on this
     // registered query). At 100 TB that is the difference between a
     // per-ingest corpus reshuffle and a co-located scan.
-    val withFp = s.conf.get("spark.graft.docStore", "").split("=", 2) match {
-      case Array(dir, table) if dir == d && s.catalog.tableExists(table) =>
+    val withFp = docStoreTable(s, d) match {
+      case Some(table) =>
         graft.sources.DocStore.loadBucketed(s, table)
           .select(col("doc_id"), col("fp"))
-      case _ => docs(s, d)
+      case None => docs(s, d)
         .select(col("doc_id"), DocStore.fpExpr(s, col("text")).as("fp"))
     }
     withFp
@@ -2353,14 +2347,11 @@ object TextQueries extends QueryModule {
   private val LogitIters = 300
   private val LogitLr = 8.0
 
-  /** Trained classifier weights memoized per corpus dir — the
-    * EmbeddingQueries.modelMemo discipline (a deployment trains the
-    * quality gate once and scores with it, not one 300-job GD run per
-    * query; the quantized-gradient fit is bit-deterministic, so a memo
-    * hit IS the retrain). Same stable-key contract as every driver
-    * model memo: a path names immutable data. */
-  private val logitMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Double]]
+  /** Trained classifier weights per (session, corpus dir): a deployment
+    * trains the quality gate once and scores with it, not one 300-job GD
+    * run per query; the quantized-gradient fit is bit-deterministic, so
+    * a memo hit IS the retrain. */
+  private val logitMemo = new SessionMemo[Array[Double]]
 
   private def q104(s: SparkSession, d: String): DataFrame = {
     val (stopRatio, alphaRatio, meanTokLen, quality) = qualityPieces
@@ -2375,7 +2366,7 @@ object TextQueries extends QueryModule {
       f(least(meanTokLen / 8.0, lit(1.0))))
     val feats = docs(s, d).select(col("doc_id"), x.as("x"),
       (FP.micro(f(quality)) >= 500000L).cast("double").as("y"))
-    val w = logitMemo.getOrElseUpdate(d,
+    val w = logitMemo.getOrElseUpdate(s, d)(
       Logit.fit(feats, "x", "y", 5, LogitIters, LogitLr))
     Logit.score(feats, w, "x", "score_u")
       .select(col("doc_id"), col("y").cast(LongType).as("label"),
@@ -2417,22 +2408,11 @@ object TextQueries extends QueryModule {
   private val BudgetDen = 5L
   private val QBucketStep = 1024L
 
-  /** q112's bounded quality histogram memoized per corpus dir — the
-    * logitMemo discipline: the histogram is a driver-held model a
-    * deployment computes once per selection run, not once per query
-    * invocation, and its aggregation is an exact integer sum, so a memo
-    * hit IS the recompute. Same stable-key contract as every driver
-    * model memo: a path names immutable data — every writer in this
-    * repo lands new corpora in fresh temp dirs (Bench's scale10/stores
-    * stages included), so no call site can rewrite a dir in place
-    * within one JVM; a process that does must call
-    * [[invalidateDriverModels]] first or be served a stale histogram. */
-  private val histMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(Long, Long)]]
-
-  /** Drop the process-lifetime driver models: for callers that re-land a
-    * corpus at a previously used path instead of a fresh dir. */
-  private[graft] def invalidateDriverModels(): Unit = histMemo.clear()
+  /** q112's bounded quality histogram per (session, corpus dir) — the
+    * logitMemo discipline: a driver-held model computed once per
+    * selection run, and an exact integer sum, so a memo hit IS the
+    * recompute. */
+  private val histMemo = new SessionMemo[Array[(Long, Long)]]
 
   private def q112(s: SparkSession, d: String): DataFrame = {
     val (_, _, _, quality) = qualityPieces
@@ -2452,7 +2432,7 @@ object TextQueries extends QueryModule {
     // by the corpus — the collect is fixed-size by construction. The
     // budget line (which buckets are wholly in, which ONE is the
     // boundary, how much of it fits) is then plain Long arithmetic.
-    val hist = histMemo.getOrElseUpdate(d,
+    val hist = histMemo.getOrElseUpdate(s, d)(
       t.groupBy(col("qb")).agg(sum(col("tok")).as("btok"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
         .sortBy { case (qb, _) => -qb })
@@ -2608,15 +2588,9 @@ object TextQueries extends QueryModule {
   }
 
   /** The at-rest TermStore this session points at for corpus `d`, if
-    * any: spark.graft.termStore = "<corpusDir>=<tableName>". The
-    * corpusDir guard keeps a store from silently serving a different
-    * corpus than the one the query names. */
+    * any: spark.graft.termStore = "<corpusDir>=<tableName>". */
   private def termStoreTable(s: SparkSession, d: String): Option[String] =
-    s.conf.get("spark.graft.termStore", "").split("=", 2) match {
-      case Array(dir, table) if dir == d && s.catalog.tableExists(table) =>
-        Some(table)
-      case _ => None
-    }
+    Stores.boundTo(s, "spark.graft.termStore", d).filter(s.catalog.tableExists(_))
 
   /** df statistics for the sparse arms — (dfreq(w, dfreq), meta(n_docs)).
     * At-rest sidecars when the session's TermStore carries them

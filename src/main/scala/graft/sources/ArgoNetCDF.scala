@@ -189,23 +189,18 @@ object ArgoNetCDF {
 
   /** All profiles under `path` (glob over the GDAC layout), one row each.
     *
-    * Default path is the DataSource V2 scan ([[ArgoNcV2]],
+    * The scan is the DataSource V2 source ([[ArgoNcV2]],
     * `format("argonc")`): column pruning reaches the FILE level — a
     * header-shaped query reads only the header probe plus the header
     * variables' byte ranges, never the (N_PROF, N_LEVELS) science grids
     * that dominate a GDAC's bytes. Row semantics are parseFile's
     * verbatim (ArgoNcV2Spec pins schema + full-row parity, and q75 runs
-    * the V2 path under the driver's DuckDB gate).
-    * `spark.graft.ncV2 = false` falls back to the binaryFile +
-    * mapPartitions scan (whole-file reads, same rows). */
+    * the V2 path under the DuckDB oracle gate). */
   def read(spark: SparkSession, path: String): DataFrame =
-    if (spark.conf.get("spark.graft.ncV2", "true") == "true")
-      spark.read.format("argonc").load(path)
-    else readV1(spark, path)
+    spark.read.format("argonc").load(path)
 
   /** The pre-V2 scan: binaryFile + typed mapPartitions (whole-file
-    * reads; parse prunes nothing). Kept as the parity baseline and the
-    * escape hatch. */
+    * reads; parse prunes nothing). Kept as the parity baseline. */
   private[graft] def readV1(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     spark.read.format("binaryFile")

@@ -350,7 +350,7 @@ object Nc3 {
         bb.put(b)
         while ((bb.position() & 3) != 0) bb.put(0.toByte)
       }
-      def putAttValue(t: Int, value: Any): Unit = {
+      def putAttValue(value: Any): Unit = {
         value match {
           case s: String => bb.put(s.getBytes(StandardCharsets.UTF_8))
           case a: Array[Byte] => bb.put(a)
@@ -372,7 +372,7 @@ object Nc3 {
             case arr: Array[_] => arr.length
           }
           bb.putInt(n)
-          putAttValue(a.ncType, a.value)
+          putAttValue(a.value)
         }
       }
       bb.put('C'.toByte).put('D'.toByte).put('F'.toByte).put(version.toByte)

@@ -16,6 +16,17 @@ object Stores {
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
   }
 
+  /** The store bound to corpus `d` by the session conf `key`, whose value
+    * is `"<corpusDir>=<store>"`: the store part when the corpus part is
+    * `d`, else None. The corpusDir guard keeps a store from silently
+    * serving a different corpus than the one a query names; each caller
+    * checks that the store exists and picks its own fallback. */
+  def boundTo(s: SparkSession, key: String, d: String): Option[String] =
+    s.conf.get(key, "").split("=", 2) match {
+      case Array(dir, store) if dir == d => Some(store)
+      case _ => None
+    }
+
   // ---- snapshot manifests (VERDICT r13 task 6) ---------------------------
   // `_manifest_v<N>`: a text file naming the directory's LIVE data files,
   // written ATOMICALLY (tmp + rename) after every mutation of a

@@ -177,18 +177,15 @@ class ArgoNcV2Spec extends SparkSuite {
     assert(globbed == v2.orderBy("WMO", "IPROF").collect().toSeq)
   }
 
-  test("the production read() rides V2 by default and falls back under spark.graft.ncV2=false") {
+  test("read() plans the V2 scan and matches readV1 row for row") {
     val a = ArgoNetCDF.read(spark, gdac)
     assert(a.queryExecution.logical.toString.contains("argonc") ||
       a.queryExecution.executedPlan.toString.contains("ArgoNcV2"),
       s"read() must plan the V2 scan:\n${a.queryExecution.executedPlan.toString.take(800)}")
-    spark.conf.set("spark.graft.ncV2", "false")
-    try {
-      val b = ArgoNetCDF.read(spark, gdac)
-      assert(b.queryExecution.executedPlan.toString.contains("MapPartitions"),
-        "fallback must plan the binaryFile parse")
-      assert(a.orderBy("WMO", "IPROF").collect().toSeq ==
-        b.orderBy("WMO", "IPROF").collect().toSeq)
-    } finally spark.conf.unset("spark.graft.ncV2")
+    val b = ArgoNetCDF.readV1(spark, gdac)
+    assert(b.queryExecution.executedPlan.toString.contains("MapPartitions"),
+      "readV1 must plan the binaryFile parse")
+    assert(a.orderBy("WMO", "IPROF").collect().toSeq ==
+      b.orderBy("WMO", "IPROF").collect().toSeq)
   }
 }
