@@ -1706,7 +1706,9 @@ object EmbeddingQueries extends QueryModule {
     // AND both quantizer trainings (fitPq scans the corpus iters times)
     // — is read back instead of recomputed: the 8 B/row codes come off a
     // cell-partitioned scan (pruned to probed cells like the vectors),
-    // the KB-sized model collects once per (session, store). Results are
+    // the KB-sized model is read per invocation — unmemoized for q45's
+    // reason: a memo keyed on the path would serve a STALE model after a
+    // same-session re-land at the same path. Results are
     // bit-identical either way (deterministic fits; doubles round-trip
     // parquet exactly) — VecStoreSpec pins parity + plan on this
     // registered query.
@@ -1714,8 +1716,7 @@ object EmbeddingQueries extends QueryModule {
       .filter(graft.sources.VecStore.hasPqSidecar(s, _))
     val (coarse, books, b) = stored match {
       case Some(p) =>
-        val (c, bks) = memoModel(s, d, s"ivfpq-model@$p")(
-          graft.sources.VecStore.loadPqModel(s, p))
+        val (c, bks) = graft.sources.VecStore.loadPqModel(s, p)
         (c, bks, graft.sources.VecStore.loadPqCodes(s, p)
           .select(col("vec_id"), col("cell"), col("code")))
       case None =>

@@ -427,7 +427,7 @@ object TextQueries extends QueryModule {
           .filter(col("doc_id") % IngestMod =!= IngestRem)
           .select(col("doc_id"), col("fp"))
       case None => docs(s, d).filter(col("doc_id") % IngestMod =!= IngestRem)
-        .select(col("doc_id"), DocStore.fpExpr(s, col("text")).as("fp"))
+        .select(col("doc_id"), DocStore.fpExpr(col("text")).as("fp"))
     }
 
   private def q110(s: SparkSession, d: String): DataFrame = {
@@ -437,7 +437,7 @@ object TextQueries extends QueryModule {
     // (DocStore.fpExpr): a raw probe against a store whose identical
     // content landed an NFC key would miss every mixed-form exact dup
     val batchFp = batch
-      .select(col("doc_id"), DocStore.fpExpr(s, col("text")).as("fp"))
+      .select(col("doc_id"), DocStore.fpExpr(col("text")).as("fp"))
     // exact tier: smallest prior holder of the fingerprint — min corpus
     // doc, or min EARLIER batch doc (ingest order = doc_id; the first
     // batch copy of a new fingerprint is 'kept', later copies are exact
@@ -452,66 +452,17 @@ object TextQueries extends QueryModule {
       .select(col("doc_id"), least(col("c_min"), col("b_prev")).as("exact_id"))
     // near tier, only for batch docs the exact tier did not resolve.
     val survivors = exact.filter(col("exact_id").isNull).select("doc_id")
-    val bBandsPlain = minhashBandFrame(
+    val bBands = minhashBandFrame(
       graft.operators.Joins.keyRepartition(batch.join(survivors, Seq("doc_id")), col("doc_id")))
       .select(col("band"), col("key"), col("doc_id").as("bd"), col("hs").as("bhs"))
-    // the q128 runtime filter applied to the NEAR tier: the batch's few
-    // (band, key) buckets build one OR-merged Bloom (a tiny job over the
-    // small side), and the probe lands on the corpus band scan BEFORE its
-    // exchange — with spark.graft.bandStore wired that scan is the
-    // at-rest band table, so a sync reads it but shuffles only the
-    // bucket-matching sliver. No false negatives (BloomSpec), and false
-    // positives die in the exact (band, key) equi-join right after, so
-    // the result is bit-equal to the unpruned plan (BandStoreSpec pins
-    // parity AND the scan-side probe).
-    //
-    // SIZE-CONDITIONAL (VERDICT r12 task 5): the Bloom build + probe is
-    // a per-sync CONSTANT (~0.3 s at sf0.1 — measured as a 40% q110
-    // regression when always-on) whose payoff is the corpus band volume
-    // it stops from reaching the exchange — real when the corpus dwarfs
-    // the batch (the 100 TB ingest shape), negative when it doesn't (the
-    // gate fixture's fixed 9:1 split). Gated on the corpus/batch row
-    // ratio, the same size-conditional discipline as the CC/trainer fast
-    // paths: default crossover 32× (spark.graft.nearBloomMinRatio);
-    // spark.graft.nearBloom=on|off forces a branch. Both branches are
-    // bit-equal by the no-false-negatives argument above — BandStoreSpec
-    // runs its probe pins (and parity) with the probe forced ON.
-    val probeOn = s.conf.get("spark.graft.nearBloom", "auto") match {
-      case "on"  => true
-      case "off" => false
-      case _ =>
-        // the two sizing counts run ONLY on the auto branch — a session
-        // that pins the branch must not pay counting jobs for a
-        // decision it has already made.
-        // the counts are memoized per (session, path) until
-        // SessionMemo.reset: a session that grows a FIXED corpus path
-        // keeps the landing-time ratio until it resets or pins the
-        // branch with spark.graft.nearBloom=on
-        val nCorpus = graft.operators.Joins.memoCount(s,
-          s"$d/documents!corpus")(docs(s, d).filter(!isBatch))
-        val nBatch = math.max(1L, graft.operators.Joins.memoCount(s,
-          s"$d/documents!batch")(docs(s, d).filter(isBatch)))
-        nCorpus >=
-          s.conf.get("spark.graft.nearBloomMinRatio", "32").toLong * nBatch
-    }
-    // bBands is checkpointed ONLY on the probed branch, where it feeds
-    // TWO consumers (the Bloom build's eager job + the candidate join) —
-    // unmaterialized there, the shingle+minhash (and the exact tier it
-    // depends on) would run twice. On the gated-off branch it has ONE
-    // consumer and the checkpoint would be pure cost: an eager
-    // driver-blocking job serialized BEFORE the main job (measured
-    // +0.6 s at sf0.1 — most of the r12→r13 q110 gap, bigger than the
-    // probe constant the gate removed).
-    val bBands = if (probeOn) bBandsPlain.localCheckpoint() else bBandsPlain
-    val cBandsAll = corpusBands(s, d)
+    // no runtime Bloom on the corpus band scan here (q128 keeps one): the
+    // batch is a fixed tenth of the corpus, and the probe is a per-sync
+    // constant (~0.3 s at sf0.1) that pays only when the corpus dwarfs
+    // the batch; a checkpoint of bBands would be pure cost as well, since
+    // the candidate join is its one consumer
+    val cBands = corpusBands(s, d)
       .filter(col("doc_id") % IngestMod =!= IngestRem)
-    val cBands = (if (!probeOn) cBandsAll else {
-      val bandBloom = bBands
-        .agg(Sketches.bloomFilter(BloomBits, BloomK)(xxhash64(col("band"), col("key"))))
-        .head.getAs[Array[Byte]](0)
-      cBandsAll.filter(BloomProbeExpr.bloomMightContain(lit(bandBloom),
-        xxhash64(col("band"), col("key")), BloomK))
-    }).select(col("band"), col("key"), col("doc_id").as("cd"), col("hs").as("chs"))
+      .select(col("band"), col("key"), col("doc_id").as("cd"), col("hs").as("chs"))
     val scored = bBands.join(cBands, Seq("band", "key"))
       .select(col("bd"), col("cd"), col("bhs"), col("chs")).distinct()
       .select(col("bd"), col("cd"),
@@ -616,7 +567,7 @@ object TextQueries extends QueryModule {
 
   private def ingestBatchFp(s: SparkSession, d: String): DataFrame =
     docs(s, d).filter(col("doc_id") % IngestMod === IngestRem)
-      .select(col("doc_id"), DocStore.fpExpr(s, col("text")).as("fp"))
+      .select(col("doc_id"), DocStore.fpExpr(col("text")).as("fp"))
 
   /** Corpus rows surviving the batch's Bloom prune — q128's candidate
     * frame (true dups plus the ~1e-3 false-positive sliver; published as
@@ -1048,7 +999,7 @@ object TextQueries extends QueryModule {
         graft.sources.DocStore.loadBucketed(s, table)
           .select(col("doc_id"), col("fp"))
       case None => docs(s, d)
-        .select(col("doc_id"), DocStore.fpExpr(s, col("text")).as("fp"))
+        .select(col("doc_id"), DocStore.fpExpr(col("text")).as("fp"))
     }
     withFp
       .groupBy(col("fp"))
@@ -1941,7 +1892,7 @@ object TextQueries extends QueryModule {
   private def q116(s: SparkSession, d: String): DataFrame = {
     val rows = docs(s, d).select(
       (col("doc_id") * 48271L % 2147483647L % DiffShards).as("shard"),
-      DocStore.fpExpr(s,
+      DocStore.fpExpr(
         concat(col("doc_id").cast("string"), lit(":"), col("text")))
         .as("rh"),
       (col("doc_id") % MergeBatchMod === MergeBatchRem).as("b"))

@@ -25,11 +25,9 @@ object DocStore {
     * over NFC-NORMALIZED text (q131's operator, [[NormalizeExpr]]): real
     * ingest sources mix Unicode forms (web crawls compose, macOS-origin
     * content decomposes), and a byte-level key would split documents
-    * that render identically. `spark.graft.docStore.nfc=false` opts a
-    * session out (e.g. to match a legacy store's raw keys); the default
-    * is on. Identity on all-ASCII text — the codegen'd isNormalized
-    * fast path — so composed-form corpora key byte-identically either
-    * way.
+    * that render identically. Identity on all-ASCII text — the codegen'd
+    * isNormalized fast path — so composed-form corpora key
+    * byte-identically.
     *
     * EVERY fp-producing surface must route through here — the landing
     * key ([[fingerprint]]), the in-session probes (q110's batch, q128's
@@ -39,34 +37,20 @@ object DocStore {
     * keys silently misses every mixed-form exact duplicate (the ASCII
     * fixtures can't see the drift; DocStoreSpec's mixed-form case can).
     * The DuckDB oracles mirror via [[sqlFp]]. */
-  def fpExpr(s: SparkSession, text: Column): Column = {
-    val nfcOn = s.conf.get("spark.graft.docStore.nfc", "true").toBoolean
-    TextFns.contentFingerprint(
-      if (nfcOn) NormalizeExpr.nfcNormalize(text) else text)
-  }
+  def fpExpr(text: Column): Column =
+    TextFns.contentFingerprint(NormalizeExpr.nfcNormalize(text))
 
   /** DuckDB twin of [[fpExpr]] — DuckDB's `nfc_normalize` is the
-    * engine-side [[NormalizeExpr]]'s oracle twin, the q131 pairing.
-    *
-    * Consults the SAME conf as [[fpExpr]] (r13 advice: this used to bake
-    * nfc unconditionally, so a session using the documented legacy-store
-    * opt-out failed every fingerprint-family oracle instead of getting a
-    * matching raw-key oracle), read from the active session at CALL
-    * time. Oracle SQL strings are built once per JVM when a module's
-    * registry first evaluates — so the opt-out must be set before the
-    * registry is touched, the same session-wide granularity the
-    * store-compatibility knob has always had. */
-  def sqlFp(e: String): String = {
-    val nfcOn = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .forall(_.conf.get("spark.graft.docStore.nfc", "true").toBoolean)
-    TextFns.sqlContentFingerprint(if (nfcOn) s"nfc_normalize($e)" else e)
-  }
+    * engine-side [[NormalizeExpr]]'s oracle twin, the q131 pairing. A
+    * pure function of its argument: no session conf feeds it, so an
+    * oracle string built once per JVM is the same whichever session
+    * existed first. */
+  def sqlFp(e: String): String =
+    TextFns.sqlContentFingerprint(s"nfc_normalize($e)")
 
   /** documents + `fp` content fingerprint ([[fpExpr]]). */
   def fingerprint(docs: DataFrame): DataFrame =
-    docs.drop("fp").withColumn("fp",
-      fpExpr(docs.sparkSession, col("text")))
+    docs.drop("fp").withColumn("fp", fpExpr(col("text")))
 
   /** Land `docs` as a parquet table bucketed and sorted on the
     * fingerprint. `buckets` sizes the parallelism of every later dedup

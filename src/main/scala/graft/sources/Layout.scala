@@ -1,7 +1,8 @@
 package graft.sources
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, xxhash64}
 
 /** Multi-dimensional data layout: rewrite a table clustered along a
   * space-filling curve so that every landed file covers a tight
@@ -46,14 +47,37 @@ object Layout {
                      partitions: Int, maxRecordsPerFile: Long = 0L): Unit =
     zWrite(batch, zCode, path, partitions, maxRecordsPerFile, "append")
 
+  /** Range-clusters by the code into `partitions` tasks, each sorted by
+    * the code, ties broken on every column, so the same frame always
+    * lands the same files with the same min/max statistics. Spark's
+    * `repartitionByRange` cannot give that: its range bounds come from a
+    * sample seeded by the RDD id, so two writes of one frame in one
+    * session cut different ranges (ZOrderSpec pins the repeat). Here the
+    * bounds are evenly spaced codes of a content-hashed sample — the 100
+    * rows per range (Spark's own default sample density) with the
+    * smallest hash of every column, the same rows whatever the
+    * partitioning — and each row goes to its range's task by an exact
+    * partitioner: an Int key k < n lands in partition k. */
   private def zWrite(df: DataFrame, zCode: Column, path: String,
                      partitions: Int, maxRecordsPerFile: Long,
-                     mode: String): Unit =
-    df.withColumn("_z", zCode)
-      .repartitionByRange(partitions, col("_z"))
-      .sortWithinPartitions(col("_z"))
+                     mode: String): Unit = {
+    val coded = df.withColumn("_z", zCode)
+    val sample = coded.filter(col("_z").isNotNull)
+      .orderBy(xxhash64(coded.columns.map(col): _*), col("_z"))
+      .limit(100 * partitions).select(col("_z")).collect().map(_.getLong(0)).sorted
+    val bounds = if (sample.isEmpty) Array.empty[Long]
+      else (1 until partitions).map(i => sample(i * sample.length / partitions)).toArray
+    val zAt = coded.schema.fieldIndex("_z")
+    val ranged = coded.rdd
+      // equal codes share a range; a NULL code (a NULL coordinate) sorts
+      // first, as it does in the sort below
+      .keyBy(r => if (r.isNullAt(zAt)) 0 else bounds.count(_ < r.getLong(zAt)))
+      .partitionBy(new HashPartitioner(partitions)).values
+    df.sparkSession.createDataFrame(ranged, coded.schema)
+      .sortWithinPartitions(("_z" +: df.columns).map(col): _*)
       .drop("_z")
       .write.mode(mode)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .parquet(path)
+  }
 }

@@ -48,7 +48,7 @@ object DocStreams {
         // report a phantom "changed" shard when a re-crawl returns the
         // same text recomposed — the q131 form-stability rule applied to
         // change detection
-        graft.sources.DocStore.fpExpr(df.sparkSession,
+        graft.sources.DocStore.fpExpr(
           concat(col("doc_id").cast("string"), lit(":"), col("text")))
           .as("rh"))
       .groupBy(col("shard"))

@@ -57,54 +57,6 @@ class BandStoreSpec extends SparkSuite {
     }
   }
 
-  test("q110 near tier: the batch Bloom probes the band-store scan before its exchange") {
-    withStore {
-      // the probe is ratio-gated (off at the fixture's 9:1 split) —
-      // force it ON to pin its plan shape, and pin that both branches
-      // are bit-equal (the no-false-negatives argument, made empirical)
-      val off = SparkEntry.queries("q110_ingest_dedup")(spark, d).collect().toSeq
-      spark.conf.set("spark.graft.nearBloom", "on")
-      try {
-        val df = SparkEntry.queries("q110_ingest_dedup")(spark, d)
-        assert(df.collect().toSeq == off,
-          "the Bloom-probed near tier differs from the unprobed branch")
-        val p = df.queryExecution.executedPlan.toString
-        assert(p.contains("bloom_might_contain"),
-          s"the near tier lost its runtime band filter:\n${p.take(2000)}")
-        // the probe must sit scan-side: below it, a band-store scan; no
-        // exchange between them (the q128 plan discipline on the near tier)
-        val lines = p.linesIterator.toSeq
-        val probeIdx = lines.indexWhere(_.contains("bloom_might_contain"))
-        val scanIdx = lines.indexWhere(_.contains("bands_bucketed"), probeIdx)
-        assert(probeIdx >= 0 && scanIdx > probeIdx,
-          s"probe is not above the band-store scan:\n${p.take(2000)}")
-        assert(!lines.slice(probeIdx, scanIdx).exists(_.contains("Exchange")),
-          s"an exchange sits between the band scan and its Bloom probe:\n$p")
-      } finally spark.conf.unset("spark.graft.nearBloom")
-    }
-  }
-
-  test("q110 near-tier Bloom gate: ratio-gated off at 9:1, forced branches agree") {
-    // auto at the fixture's 9:1 corpus/batch ratio must skip the probe
-    // (the sf0.1 regression the gate exists to remove) — and a LOW
-    // crossover must turn it back on, so a 100 TB-shaped deployment gets
-    // the prune without touching code
-    val auto = SparkEntry.queries("q110_ingest_dedup")(spark, d)
-    auto.collect()
-    assert(!auto.queryExecution.executedPlan.toString
-      .contains("bloom_might_contain"),
-      "auto gate must skip the probe at the fixture's 9:1 ratio")
-    spark.conf.set("spark.graft.nearBloomMinRatio", "2")
-    try {
-      val low = SparkEntry.queries("q110_ingest_dedup")(spark, d)
-      val rows = low.collect().toSeq
-      assert(low.queryExecution.executedPlan.toString
-        .contains("bloom_might_contain"),
-        "a 2x crossover must engage the probe at 9:1")
-      assert(rows == auto.collect().toSeq, "gated branches disagree")
-    } finally spark.conf.unset("spark.graft.nearBloomMinRatio")
-  }
-
   test("store scan parity: the landed rows ARE the verified construction") {
     withStore {
       val got = BandStore.loadBucketed(spark, "bands_bucketed")

@@ -87,17 +87,7 @@ class DocStoreSpec extends SparkSuite {
         .as[(Long, Long, Long)].collect().sorted.toSeq
       assert(got.size == 20, s"expected 20 form-stable groups, got ${got.size}")
       assert(got.forall(_._3 == 2), s"every group holds both forms: $got")
-      // a raw byte key would have split every group: opt out and re-land
-      spark.conf.set("spark.graft.docStore.nfc", "false")
-      try {
-        DocStore.saveBucketed(mixed, "docs_raw", buckets = 4,
-          path = Some(tmp.resolve("r").toString))
-        val raw = DocStore.loadBucketed(spark, "docs_raw")
-          .select(countDistinct(col("fp"))).head.getLong(0)
-        assert(raw == 40, s"raw keys must split the mixed forms: $raw groups")
-      } finally spark.conf.unset("spark.graft.docStore.nfc")
-    } finally Seq("docs_nfc", "docs_raw")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    } finally spark.sql("DROP TABLE IF EXISTS docs_nfc")
   }
 
   test("mixed-form ingest: q110/q128 store-wired ≡ cold, NFD batch finds its NFC corpus twin") {

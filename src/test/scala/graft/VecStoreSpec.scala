@@ -93,4 +93,32 @@ class VecStoreSpec extends SparkSuite {
         "sidecar dirs must stay invisible to the vector store's discovery")
     } finally spark.conf.unset("spark.graft.vecStore")
   }
+
+  test("q78 after a same-session re-land at the same path reads the new PQ model") {
+    // the rebalance flow the store docs recommend: re-train and re-land
+    // at the SAME path inside one session. The next q78 must route its
+    // probes by the new sidecar's quantizers — exactly what a fresh
+    // session reading the re-landed store computes — not by a model
+    // remembered from before the re-land
+    val tmp = graft.TempDirs.create("graft-vecstore-reland")
+      .resolve("store").toString
+    graft.queries.EmbeddingQueries.landVecStore(spark, d, tmp)
+    spark.conf.set("spark.graft.vecStore", s"$d=$tmp")
+    try {
+      val before = SparkEntry.queries("q78_ivfpq_ann")(spark, d).collect().toSeq
+      graft.queries.EmbeddingQueries.landVecStore(spark,
+        "/root/testdata/sf0.01", tmp)
+      val again = SparkEntry.queries("q78_ivfpq_ann")(spark, d).collect().toSeq
+      val fresh = spark.newSession()
+      fresh.conf.set("spark.graft.vecStore", s"$d=$tmp")
+      val want = SparkEntry.queries("q78_ivfpq_ann")(fresh, d).collect().toSeq
+      assert(want.nonEmpty && want != before,
+        "the re-landed store must change q78's answer, or this proves nothing")
+      assert(again == want,
+        "q78 after a same-path re-land must equal a fresh session's run")
+    } finally {
+      spark.conf.unset("spark.graft.vecStore")
+      graft.TempDirs.deleteRec(tmp)
+    }
+  }
 }

@@ -129,6 +129,41 @@ class ZOrderSpec extends SparkSuite {
       s"z-order pruned too little: scanned $zRows vs linear $linRows")
   }
 
+  test("the same frame z-written twice lands the same files with the same min/max") {
+    // ~3 rows per code, so ties are common, and more rows than a range
+    // sample holds: a seeded sample or an arbitrary tie order would move
+    // file boundaries, and with them the statistics pruning reads
+    val df = spark.range(50000L)
+      .select(col("id"),
+        (col("id") * 48271L % 100003L % 128L).cast("int").as("x"),
+        (col("id") * 40503L % 99991L % 128L).cast("int").as("y"))
+    val tmp = graft.TempDirs.create("graft-zorder-repeat")
+    // per file (task index, file index within the task): each column's
+    // min and max, and the row count
+    def stats(dir: String): Map[String, Seq[Long]] =
+      spark.read.parquet(dir).groupBy(input_file_name().as("f"))
+        .agg(min("id"), max("id"), min("x"), max("x"), min("y"), max("y"),
+          count(lit(1)))
+        .collect().map { r =>
+          val m = "part-(\\d+)-.*-c(\\d+)".r.findFirstMatchIn(r.getString(0)).get
+          s"${m.group(1)}-${m.group(2)}" -> (1 to 7).map(r.getAs[Number](_).longValue)
+        }.toMap
+    try {
+      val runs = Seq("a", "b").map { sub =>
+        val dir = tmp.resolve(sub).toString
+        Layout.writeZOrdered(df, ZOrderExpr.zorder2(col("x"), col("y")), dir,
+          partitions = 8, maxRecordsPerFile = 1024)
+        stats(dir)
+      }
+      assert(runs.head.size >= 8, s"expected several files: ${runs.head.keys}")
+      val moved = runs.head.keySet.union(runs(1).keySet)
+        .filter(k => runs.head.get(k) != runs(1).get(k))
+      assert(moved.isEmpty, s"${moved.size} files' statistics moved between two " +
+        "writes, e.g. " + moved.toSeq.sorted.take(3)
+          .map(k => s"$k ${runs.head.get(k)} vs ${runs(1).get(k)}").mkString("; "))
+    } finally graft.TempDirs.deleteRec(tmp.toString)
+  }
+
   test("q129 end-to-end: rectangle aggregate over the rewritten layout") {
     val rows = SparkEntry.queries("q129_zorder_scan")(
       spark, "/root/testdata/sf0.001").collect()
