@@ -20,8 +20,7 @@ object Warmup {
     val qc = Array.fill(120)(1.0)
     val prefD = graft.argo.ArgoSchemas.Pref
     // a rho*cf-like ascending ladder for the R14 displacement lookup
-    val ladder = java.nio.ByteBuffer.allocate(8 * 64)
-    (0 until 64).foreach(k => ladder.putDouble(8 * k, 1025.0 + k * 0.05))
+    val ladder = Array.tabulate(64)(k => 1025.0 + k * 0.05)
     var sink = 0.0
     var it = 0
     while (it < 4000) {
@@ -37,7 +36,7 @@ object Warmup {
       sink += Teos10.rhoInP(35.5, 10.0 + (it % 20))((it % 64) * 30.0)
       sink += Teos10.soundSpeed(35.5, 10.0, (it % 64) * 30.0)
       sink += Interp.linear(pres, temp, 100.0 + (it % 1900))
-      sink += Interp.linearBB(ladder, 0, 64, prefD, 1025.0 + (it % 32) * 0.1)
+      sink += Interp.linearLadder(ladder, prefD, 1025.0 + (it % 32) * 0.1)
       it += 1
     }
     // sink is never MinValue; the check defeats dead-code elimination

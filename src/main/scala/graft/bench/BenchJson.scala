@@ -50,8 +50,13 @@ object BenchJson {
 
   def kv(key: String, x: Double, fmt: Fmt): KV = KV(key, Seq(x), fmt)
 
-  /** Candidate and survivor counts: deterministic, never min-merged. */
-  def isCount(k: String): Boolean = k.endsWith("cand") || k.endsWith("out")
+  /** Deterministic counts, never min-merged: candidate and survivor
+    * counts, and the stores stage's q129 row and pruning counts (its
+    * other `…scan` keys are seconds). */
+  def isCount(k: String): Boolean = k.endsWith("cand") || k.endsWith("out") ||
+    StoreCounts(k)
+
+  private val StoreCounts = Set("q129rows", "q129scan", "q129scan_app")
 
   /** Verdict flags (`cont`/`contended`, `slow`, the per-query `q43slow`). */
   def isFlag(k: String): Boolean = k.startsWith("cont") || k.endsWith("slow")

@@ -32,36 +32,11 @@ object Interp {
     ys(i) + (ys(i + 1) - ys(i)) * frac
   }
 
-  /** [[linear]] where xs is a ladder of `n` doubles packed in `bb` at byte
-    * offset `off` — zero-allocation np.interp for per-pair hot loops (the
-    * atlas R14 displacement lookup reads the cell's compensated-density
-    * ladder in place instead of unpacking 64 doubles per pair row). */
-  def linearBB(bb: java.nio.ByteBuffer, off: Int, n: Int,
-               ys: Array[Double], t: Double): Double = {
-    @inline def x(i: Int): Double = bb.getDouble(off + 8 * i)
-    if (t <= x(0)) return ys(0)
-    if (t >= x(n - 1)) return ys(n - 1)
-    var lo = 0
-    var hi = n - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val v = x(mid)
-      if (v < t) lo = mid + 1
-      else if (v > t) hi = mid - 1
-      else return ys(mid)
-    }
-    val i = lo - 1
-    val frac = (t - x(i)) / (x(i + 1) - x(i))
-    ys(i) + (ys(i + 1) - ys(i)) * frac
-  }
-
-  /** [[linearBB]]'s EXACT search and arithmetic over an unpacked ladder
-    * array: hot loops that probe the same ladder many times (the R14
-    * displacement lookup probes a cell's 64-entry ladder 64× per pair row)
-    * unpack it once and pay primitive array loads instead of ~6 buffer
-    * reads per probe. Kept as a byte-for-byte twin of [[linearBB]] —
-    * including midpoint tie handling — so swapping between them can never
-    * change a fixture. */
+  /** [[linear]] for the R14 displacement lookup's inner loop (a cell's
+    * 64-entry ladder probed 64× per pair row): an inline binary search,
+    * without [[linear]]'s argument check. Same result as [[linear]] bit
+    * for bit on a strictly increasing finite ladder, exact hits and both
+    * end clamps included (InterpSpec pins it). */
   def linearLadder(xs: Array[Double], ys: Array[Double], t: Double): Double = {
     val n = xs.length
     if (t <= xs(0)) return ys(0)

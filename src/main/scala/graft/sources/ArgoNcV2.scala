@@ -6,19 +6,19 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualNullSafe, EqualTo, Filter, In, IsNotNull, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 GDAC profile scan (`format("argonc")`) — the
-  * column-pruning upgrade of [[ArgoNetCDF.read]]'s binaryFile path.
+/** DataSource V2 GDAC profile scan (`format("argonc")`, behind
+  * [[ArgoNetCDF.read]]) — the column-pruning upgrade of the binaryFile
+  * path ([[ArgoNetCDF.readV1]]).
   *
   * The binaryFile + typed-mapPartitions scan is correct and distributed,
   * but column pruning and predicate pushdown stop at the parse boundary:
@@ -32,19 +32,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * probe, grown on demand) plus the byte ranges of the variables those
   * columns need, and everything else is never read off storage.
   *
-  * Semantics mirror [[ArgoNetCDF.parseFile]] exactly (ArgoNcV2Spec pins
-  * full-schema row parity and schema equality against the binaryFile
-  * path): one row per profile, rows exist only when the file has
-  * N_PROF/N_LEVELS and the PRES/TEMP/PSAL grids (a HEADER property —
-  * checked without reading data), `_ADJUSTED` columns null when absent,
-  * QC digits multiplied across variables, dac/WMO from the path. A file
-  * whose needed variables include a RECORD variable falls back to a
-  * whole-file read through the verbatim parse path (correct, unpruned —
-  * GDAC `_prof.nc` fixtures here are fixed-dim).
+  * Row semantics are [[ArgoNetCDF.decode]]'s, the same function the
+  * binaryFile paths run: this reader only gives it an [[Nc3.NcFile]] whose
+  * variable data comes from positioned reads, so the columns a query does
+  * not require cost no I/O. A required RECORD variable fails the read with
+  * the reader's "is a record variable" message.
   */
 object ArgoNcV2 {
-  /** Output schema — field-for-field the encoder schema of
-    * [[ArgoNetCDF.ProfileRow]] (ArgoNcV2Spec asserts equality). */
+  /** Output schema: one row per profile, header fields then the
+    * (N_LEVELS) sample arrays. */
   val Schema: StructType = {
     def arr(nullable: Boolean) =
       (n: String) => StructField(n, ArrayType(DoubleType, containsNull = false), nullable)
@@ -65,23 +61,9 @@ object ArgoNcV2 {
       Seq(arr(nullable = true)("QC"), arr(nullable = true)("QC_ADJUSTED")))
   }
 
-  /** NC3 variables each output column needs — the pruning map. Columns
-    * absent here (dac/WMO/IPROF/N_LEVELS) come from the path and the
-    * header dims alone. */
-  private[sources] val VarsFor: Map[String, Seq[String]] = Map(
-    "JULD" -> Seq("JULD"),
-    "LONGITUDE" -> Seq("LONGITUDE"),
-    "LATITUDE" -> Seq("LATITUDE"),
-    "data_mode" -> Seq("DATA_MODE"),
-    "platform_type" -> Seq("PLATFORM_TYPE"),
-    "position_qc" -> Seq("POSITION_QC"),
-    "juld_qc" -> Seq("JULD_QC"),
-    "PRES" -> Seq("PRES"), "TEMP" -> Seq("TEMP"), "PSAL" -> Seq("PSAL"),
-    "PRES_ADJUSTED" -> Seq("PRES_ADJUSTED"),
-    "TEMP_ADJUSTED" -> Seq("TEMP_ADJUSTED"),
-    "PSAL_ADJUSTED" -> Seq("PSAL_ADJUSTED"),
-    "QC" -> Seq("PRES_QC", "TEMP_QC", "PSAL_QC"),
-    "QC_ADJUSTED" -> Seq("PRES_ADJUSTED_QC", "TEMP_ADJUSTED_QC", "PSAL_ADJUSTED_QC"))
+  /** Row encoder for [[Schema]]: the binaryFile paths map decoded rows
+    * through it. */
+  val RowEncoder: ExpressionEncoder[Row] = ExpressionEncoder(Schema)
 
   /** Local-mode pruning witness: every variable the range reader actually
     * reads data bytes for is recorded here, so ArgoNcV2Spec can assert
@@ -95,23 +77,6 @@ object ArgoNcV2 {
     * single-WMO query must open exactly its one file. */
   private[graft] val openedFilesWitness = new ConcurrentLinkedQueue[String]()
   @volatile private[graft] var witnessEnabled = false
-
-  private val Epoch1950Ms = -631152000000L
-
-  /** Guard for the whole-file paths: a JVM byte array caps at ~2³¹, and
-    * without this a >2 GiB NC3 file (CDF-2/64-bit-offset allows them)
-    * would surface as a bare NegativeArraySizeException from `len.toInt`
-    * overflow. The pruned range path handles such files FINE (per-variable
-    * ranges are far smaller than the file); only the record-variable
-    * fallback needs the full image, so fail it with an actionable message
-    * instead of an arithmetic artifact. */
-  private[graft] def requireJvmReadable(len: Long, path: String): Unit =
-    if (len > Int.MaxValue - 16L)
-      throw new UnsupportedOperationException(
-        s"$path is $len bytes: the record-variable fallback materializes " +
-          "the whole file and a JVM array caps at 2 GiB. Split the file, " +
-          "or restructure it with fixed dimensions so the pruned range " +
-          "reader (which has no such limit) serves it.")
 
   /** The session Hadoop configuration entries that DIFFER from a
     * default `Configuration` — the overlay a reader needs to resolve a
@@ -183,7 +148,7 @@ object ArgoNcV2 {
   }
 
   /** Range-reading reader over one file group: per file, header probe
-    * first, then one seek + contiguous read per NEEDED fixed variable. */
+    * first, then one positioned read per variable a required column needs. */
   private final class NcReader(paths: Seq[String], required: StructType,
                                overlay: Map[String, String])
       extends PartitionReader[InternalRow] {
@@ -205,6 +170,15 @@ object ArgoNcV2 {
       val fs = hp.getFileSystem(conf)
       val len = fs.getFileStatus(hp).getLen
       val in = fs.open(hp)
+      val source = new Nc3.Source {
+        def length: Long = len
+        def read(name: String, pos: Long, n: Int): java.nio.ByteBuffer = {
+          val buf = new Array[Byte](n)
+          in.readFully(pos, buf, 0, n)
+          if (witnessEnabled) readVarsWitness.add(name)
+          java.nio.ByteBuffer.wrap(buf)
+        }
+      }
       try {
         // header probe, grown on demand: Argo headers are a few KB, but a
         // file with a huge attribute block must not defeat the parse
@@ -213,7 +187,7 @@ object ArgoNcV2 {
         while (nc == null) {
           val probe = new Array[Byte](probeLen)
           in.readFully(0L, probe, 0, probeLen)
-          try nc = new Nc3.NcFile(probe)
+          try nc = new Nc3.NcFile(probe, source)
           catch {
             // NonFatal only: an OOM or interrupt must fail the task, not
             // retry with a 4x larger allocation
@@ -221,157 +195,9 @@ object ArgoNcV2 {
               probeLen = math.min(len, probeLen * 4L).toInt
           }
         }
-        val (dac, wmo) = ArgoNetCDF.dacWmoFromPath(path) match {
-          case Some(dw) => dw
-          case None => return Iterator.empty
-        }
-        val nProf = nc.dims.find(_.name == "N_PROF").map(_.length).getOrElse(0)
-        val nLev = nc.dims.find(_.name == "N_LEVELS").map(_.length).getOrElse(0)
-        // row existence mirrors parseFile: dims present AND the science
-        // grids DECLARED (a header check — no data bytes read for it)
-        if (nProf == 0 || nLev == 0 ||
-            !Seq("PRES", "TEMP", "PSAL").forall(nc.has)) return Iterator.empty
-
-        val neededCols = required.fieldNames.toSeq
-        val neededVars = neededCols.flatMap(VarsFor.getOrElse(_, Nil))
-          .distinct.filter(nc.has)
-        if (neededVars.exists(n => nc.variable(n).isRecord)) {
-          // record-variable fallback: whole file through the verbatim
-          // parse path, then project — correct, just unpruned
-          requireJvmReadable(len, path)
-          val all = new Array[Byte](len.toInt)
-          in.readFully(0L, all, 0, len.toInt)
-          return ArgoNetCDF.parseFile(path, all).iterator.map(projectRow)
-        }
-
-        // one seek + contiguous read per needed variable (the pruning)
-        val data: Map[String, Array[Byte]] = neededVars.map { name =>
-          val v = nc.variable(name)
-          val dataLen = v.shape.foldLeft(1L)(_ * _) * Nc3.typeSize(v.ncType)
-          val buf = new Array[Byte](dataLen.toInt)
-          in.readFully(v.begin, buf, 0, dataLen.toInt)
-          if (witnessEnabled) readVarsWitness.add(name)
-          name -> buf
-        }.toMap
-
-        def doubles(name: String): Array[Double] = {
-          val v = nc.variable(name)
-          val bb = java.nio.ByteBuffer.wrap(data(name))
-          val n = v.shape.foldLeft(1L)(_ * _).toInt
-          val out = new Array[Double](n)
-          var i = 0
-          v.ncType match {
-            case Nc3.NcByte => while (i < n) { out(i) = bb.get(); i += 1 }
-            case Nc3.NcShort => while (i < n) { out(i) = bb.getShort(); i += 1 }
-            case Nc3.NcInt => while (i < n) { out(i) = bb.getInt(); i += 1 }
-            case Nc3.NcFloat => while (i < n) { out(i) = bb.getFloat(); i += 1 }
-            case Nc3.NcDouble => while (i < n) { out(i) = bb.getDouble(); i += 1 }
-            case Nc3.NcChar => throw new IllegalArgumentException(s"$name is NC_CHAR")
-          }
-          out
-        }
-        def chars(name: String): Array[Byte] = data(name)
-
-        // the parseFile constructions, evaluated LAZILY per needed column
-        def charPerProf(name: String, default: String): Array[String] =
-          if (nc.has(name)) {
-            val v = nc.variable(name)
-            if (v.shape.length == 1) chars(name).map(_.toChar.toString)
-            else {
-              val w = v.shape(1)
-              val raw = chars(name)
-              Array.tabulate(nProf)(i =>
-                new String(raw, i * w, w,
-                  java.nio.charset.StandardCharsets.UTF_8).trim)
-            }
-          } else Array.fill(nProf)(default)
-        def qcGrid(names: Seq[String]): Option[Array[Double]] =
-          if (!names.forall(nc.has)) None
-          else {
-            val parts = names.map(n => chars(n)
-              .map(c => if (c >= '0' && c <= '9') (c - '0').toDouble else 0.0))
-            Some(Array.tabulate(nProf * nLev)(i => parts.map(_(i)).product))
-          }
-        def sliceArr(a: Array[Double], i: Int): ArrayData =
-          ArrayData.toArrayData(java.util.Arrays.copyOfRange(a, i * nLev, (i + 1) * nLev))
-        def qcHead(a: Array[String], i: Int): Int =
-          a(i).headOption.filter(_.isDigit).map(_ - '0').getOrElse(0)
-
-        // per-column cell producers, built once per file (absent optional
-        // variables resolve to null producers, matching parseFile's None)
-        val producers: Array[Int => Any] = neededCols.map {
-          case "dac" => (_: Int) => UTF8String.fromString(dac)
-          case "WMO" => (_: Int) => wmo
-          case "IPROF" => (i: Int) => i.toShort
-          case "N_LEVELS" => (_: Int) => nLev
-          case "JULD" =>
-            val juld = doubles("JULD")
-            (i: Int) => Epoch1950Ms * 1000L + math.round(juld(i) * 86400000.0) * 1000L
-          case "LONGITUDE" =>
-            val lon = doubles("LONGITUDE"); (i: Int) => lon(i).toFloat
-          case "LATITUDE" =>
-            val lat = doubles("LATITUDE"); (i: Int) => lat(i).toFloat
-          case "data_mode" =>
-            val dm = chars("DATA_MODE").map(_.toChar.toString)
-            (i: Int) => UTF8String.fromString(dm(i))
-          case "platform_type" =>
-            val p = charPerProf("PLATFORM_TYPE", "")
-            (i: Int) => UTF8String.fromString(p(i))
-          case "position_qc" =>
-            val p = charPerProf("POSITION_QC", "1"); (i: Int) => qcHead(p, i)
-          case "juld_qc" =>
-            val p = charPerProf("JULD_QC", "1"); (i: Int) => qcHead(p, i)
-          case n @ ("PRES" | "TEMP" | "PSAL") =>
-            val a = doubles(n); (i: Int) => sliceArr(a, i)
-          case n @ ("PRES_ADJUSTED" | "TEMP_ADJUSTED" | "PSAL_ADJUSTED") =>
-            if (nc.has(n)) { val a = doubles(n); (i: Int) => sliceArr(a, i) }
-            else (_: Int) => null
-          case "QC" =>
-            val a = qcGrid(Seq("PRES_QC", "TEMP_QC", "PSAL_QC"))
-              .getOrElse(Array.fill(nProf * nLev)(1.0))
-            (i: Int) => sliceArr(a, i)
-          case "QC_ADJUSTED" =>
-            qcGrid(Seq("PRES_ADJUSTED_QC", "TEMP_ADJUSTED_QC",
-              "PSAL_ADJUSTED_QC")) match {
-              case Some(a) => (i: Int) => sliceArr(a, i)
-              case None => (_: Int) => null
-            }
-          case other => throw new IllegalArgumentException(s"unknown column $other")
-        }.toArray
-
-        (0 until nProf).iterator.map { i =>
-          new GenericInternalRow(producers.map(_(i)).asInstanceOf[Array[Any]])
-        }
+        // decode reads every variable it needs before it returns
+        ArgoNetCDF.decode(path, nc, required.fieldNames.toSeq)
       } finally in.close()
-    }
-
-    /** Record-fallback projection: a full [[ArgoNetCDF.ProfileRow]] down
-      * to the required columns as an InternalRow. */
-    private def projectRow(r: ArgoNetCDF.ProfileRow): InternalRow = {
-      def arr(a: Seq[Double]): ArrayData = ArrayData.toArrayData(a.toArray)
-      val cells: Array[Any] = required.fieldNames.map {
-        case "dac" => UTF8String.fromString(r.dac)
-        case "WMO" => r.WMO
-        case "IPROF" => r.IPROF
-        case "JULD" => r.JULD.getTime * 1000L
-        case "LONGITUDE" => r.LONGITUDE
-        case "LATITUDE" => r.LATITUDE
-        case "data_mode" => UTF8String.fromString(r.data_mode)
-        case "platform_type" => UTF8String.fromString(r.platform_type)
-        case "position_qc" => r.position_qc
-        case "juld_qc" => r.juld_qc
-        case "N_LEVELS" => r.N_LEVELS
-        case "PRES" => arr(r.PRES)
-        case "TEMP" => arr(r.TEMP)
-        case "PSAL" => arr(r.PSAL)
-        case "PRES_ADJUSTED" => r.PRES_ADJUSTED.map(arr).orNull
-        case "TEMP_ADJUSTED" => r.TEMP_ADJUSTED.map(arr).orNull
-        case "PSAL_ADJUSTED" => r.PSAL_ADJUSTED.map(arr).orNull
-        case "QC" => arr(r.QC)
-        case "QC_ADJUSTED" => r.QC_ADJUSTED.map(arr).orNull
-        case other => throw new IllegalArgumentException(s"unknown column $other")
-      }.toArray
-      new GenericInternalRow(cells)
     }
   }
 

@@ -1,18 +1,22 @@
 package graft.sources
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** S2: the Argo GDAC NetCDF profile source (reference toctools.py:117-118
   * `<dac>/<wmo>/<wmo>_prof.nc`, read via xarray at toctools.py:190-192 and
   * interpolation.py:182-197).
   *
-  * Spark shape: `binaryFile` lists and reads the files distributed — one
-  * `_prof.nc` is one row (whole-file, the files are MB-scale) — and a typed
-  * `mapPartitions` parses each with the self-contained [[Nc3]] reader and
-  * fans out one row per profile. File listing IS catalog discovery (S1) on
+  * Spark shape: the files are listed and read distributed, and each is
+  * decoded by [[decode]] over an [[Nc3.NcFile]], one row per profile. The
+  * byte source is the only thing that differs between the scans: the
+  * default [[read]] ([[ArgoNcV2]]) reads only the variables a query needs
+  * with positioned reads, while [[readV1]] and [[readStream]] hand decode
+  * whole files from `binaryFile`. File listing IS catalog discovery (S1) on
   * the GDAC's directory layout; at 100 TB the listing parallelizes over the
   * driver's file index, the parse over executors, and no single process
   * ever holds more than one file's bytes (the reference's process pool +
@@ -28,22 +32,8 @@ import org.apache.spark.sql.functions._
   */
 object ArgoNetCDF {
 
-  /** One profile row, flat: header + sample arrays. */
-  final case class ProfileRow(
-      dac: String, WMO: Int, IPROF: Short, JULD: Timestamp,
-      LONGITUDE: Float, LATITUDE: Float,
-      data_mode: String, platform_type: String,
-      position_qc: Int, juld_qc: Int, N_LEVELS: Int,
-      PRES: Seq[Double], TEMP: Seq[Double], PSAL: Seq[Double],
-      PRES_ADJUSTED: Option[Seq[Double]], TEMP_ADJUSTED: Option[Seq[Double]],
-      PSAL_ADJUSTED: Option[Seq[Double]], QC: Seq[Double],
-      QC_ADJUSTED: Option[Seq[Double]])
-
   /** Argo JULD epoch: days since 1950-01-01T00:00:00Z. */
   private val Epoch1950Ms = -631152000000L
-
-  private def juldToTs(days: Double): Timestamp =
-    new Timestamp(Epoch1950Ms + math.round(days * 86400000.0))
 
   /** `.../<dac>/<wmo>/<wmo>_prof.nc` → (dac, wmo). Returns None (caller
     * skips the file) when the name carries no leading WMO digits — one
@@ -62,21 +52,25 @@ object ArgoNetCDF {
     }
   }
 
-  /** Parse one `_prof.nc` into per-profile rows. */
-  private[sources] def parseFile(path: String, bytes: Array[Byte]): Seq[ProfileRow] = {
+  /** The one profile decode: the rows of the `_prof.nc` at `path`, one
+    * per profile, holding `columns` (names of [[ArgoNcV2.Schema]]) in the
+    * order given. Rows exist only when the path names a WMO and the file
+    * has N_PROF/N_LEVELS and declares the PRES/TEMP/PSAL grids — a header
+    * check, no data is read for it. Each column reads only the variables
+    * it needs, once, before this returns: the caller may close `nc`'s
+    * source as soon as it has the iterator. QC is the product of the
+    * per-variable `*_QC` digits (interpolation.py:195-196; a non-digit
+    * counts 0), and an `_ADJUSTED` column is null when the file lacks it. */
+  def decode(path: String, nc: Nc3.NcFile, columns: Seq[String]): Iterator[InternalRow] = {
     val (dac, wmo) = dacWmoFromPath(path) match {
       case Some(dw) => dw
-      case None => return Seq.empty
+      case None => return Iterator.empty
     }
-    val nc = new Nc3.NcFile(bytes)
     val nProf = nc.dims.find(_.name == "N_PROF").map(_.length).getOrElse(0)
     val nLev = nc.dims.find(_.name == "N_LEVELS").map(_.length).getOrElse(0)
-    if (nProf == 0 || nLev == 0) return Seq.empty
+    if (nProf == 0 || nLev == 0 || !Seq("PRES", "TEMP", "PSAL").forall(nc.has))
+      return Iterator.empty
 
-    val juld = nc.readDoubles("JULD")
-    val lon = nc.readDoubles("LONGITUDE")
-    val lat = nc.readDoubles("LATITUDE")
-    val dataMode = nc.readChars("DATA_MODE").map(_.toChar.toString)
     def charPerProf(name: String, default: String): Array[String] =
       if (nc.has(name)) {
         val v = nc.variable(name)
@@ -88,14 +82,10 @@ object ArgoNetCDF {
             new String(raw, i * w, w, java.nio.charset.StandardCharsets.UTF_8).trim)
         }
       } else Array.fill(nProf)(default)
-    val platform = charPerProf("PLATFORM_TYPE", "")
-    val posQc = charPerProf("POSITION_QC", "1")
-    val juldQc = charPerProf("JULD_QC", "1")
-
-    def grid(name: String): Option[Array[Double]] =
-      if (nc.has(name)) Some(nc.readDoubles(name)) else None
-    // QC chars '0'..'9' → digits, multiplied across variables
-    // (interpolation.py:195-196); non-digit (blank fill) → 0.
+    def qcHead(name: String): Int => Any = {
+      val p = charPerProf(name, "1")
+      i => p(i).headOption.filter(_.isDigit).map(_ - '0').getOrElse(0)
+    }
     def qcGrid(names: Seq[String]): Option[Array[Double]] =
       if (!names.forall(nc.has)) None
       else {
@@ -103,33 +93,38 @@ object ArgoNetCDF {
           .map(c => if (c >= '0' && c <= '9') (c - '0').toDouble else 0.0))
         Some(Array.tabulate(nProf * nLev)(i => parts.map(_(i)).product))
       }
+    def perProf(a: Array[Double]): Int => Any = i =>
+      ArrayData.toArrayData(java.util.Arrays.copyOfRange(a, i * nLev, (i + 1) * nLev))
+    def orNull(a: Option[Array[Double]]): Int => Any =
+      a.map(perProf).getOrElse(_ => null)
+    def str(a: Array[String]): Int => Any = i => UTF8String.fromString(a(i))
 
-    (grid("PRES"), grid("TEMP"), grid("PSAL")) match {
-      case (Some(pres), Some(temp), Some(psal)) =>
-        val qc = qcGrid(Seq("PRES_QC", "TEMP_QC", "PSAL_QC"))
-          .getOrElse(Array.fill(nProf * nLev)(1.0))
-        val presA = grid("PRES_ADJUSTED")
-        val tempA = grid("TEMP_ADJUSTED")
-        val psalA = grid("PSAL_ADJUSTED")
-        val qcA = qcGrid(
-          Seq("PRES_ADJUSTED_QC", "TEMP_ADJUSTED_QC", "PSAL_ADJUSTED_QC"))
+    val cells: Array[Int => Any] = columns.map {
+      case "dac" => (_: Int) => UTF8String.fromString(dac)
+      case "WMO" => (_: Int) => wmo
+      case "IPROF" => (i: Int) => i.toShort
+      case "N_LEVELS" => (_: Int) => nLev
+      case "JULD" =>
+        val juld = nc.readDoubles("JULD")
+        (i: Int) => (Epoch1950Ms + math.round(juld(i) * 86400000.0)) * 1000L
+      case n @ ("LONGITUDE" | "LATITUDE") =>
+        val a = nc.readDoubles(n); (i: Int) => a(i).toFloat
+      case "data_mode" => str(nc.readChars("DATA_MODE").map(_.toChar.toString))
+      case "platform_type" => str(charPerProf("PLATFORM_TYPE", ""))
+      case "position_qc" => qcHead("POSITION_QC")
+      case "juld_qc" => qcHead("JULD_QC")
+      case n @ ("PRES" | "TEMP" | "PSAL") => perProf(nc.readDoubles(n))
+      case n @ ("PRES_ADJUSTED" | "TEMP_ADJUSTED" | "PSAL_ADJUSTED") =>
+        orNull(Option.when(nc.has(n))(nc.readDoubles(n)))
+      case "QC" =>
+        perProf(qcGrid(Seq("PRES_QC", "TEMP_QC", "PSAL_QC"))
+          .getOrElse(Array.fill(nProf * nLev)(1.0)))
+      case "QC_ADJUSTED" =>
+        orNull(qcGrid(Seq("PRES_ADJUSTED_QC", "TEMP_ADJUSTED_QC", "PSAL_ADJUSTED_QC")))
+      case other => throw new IllegalArgumentException(s"unknown column $other")
+    }.toArray
 
-        def row(a: Array[Double], i: Int): Seq[Double] =
-          a.slice(i * nLev, (i + 1) * nLev).toSeq
-
-        (0 until nProf).map { i =>
-          ProfileRow(dac, wmo, i.toShort, juldToTs(juld(i)),
-            lon(i).toFloat, lat(i).toFloat,
-            dataMode(i), platform(i),
-            posQc(i).headOption.filter(_.isDigit).map(_ - '0').getOrElse(0),
-            juldQc(i).headOption.filter(_.isDigit).map(_ - '0').getOrElse(0),
-            nLev,
-            row(pres, i), row(temp, i), row(psal, i),
-            presA.map(row(_, i)), tempA.map(row(_, i)), psalA.map(row(_, i)),
-            row(qc, i), qcA.map(row(_, i)))
-        }
-      case _ => Seq.empty
-    }
+    Iterator.tabulate(nProf)(i => new GenericInternalRow(cells.map(_(i))))
   }
 
   /** One row of the Argo HISTORY block (the file's processing audit
@@ -193,49 +188,50 @@ object ArgoNetCDF {
     * `format("argonc")`): column pruning reaches the FILE level — a
     * header-shaped query reads only the header probe plus the header
     * variables' byte ranges, never the (N_PROF, N_LEVELS) science grids
-    * that dominate a GDAC's bytes. Row semantics are parseFile's
-    * verbatim (ArgoNcV2Spec pins schema + full-row parity, and q75 runs
-    * the V2 path under the DuckDB oracle gate). */
+    * that dominate a GDAC's bytes. Row semantics are [[decode]]'s
+    * (ArgoNcV2Spec pins the decoded values, and q75 runs the V2 path under
+    * the DuckDB oracle gate). */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.format("argonc").load(path)
 
-  /** The pre-V2 scan: binaryFile + typed mapPartitions (whole-file
-    * reads; parse prunes nothing). Kept as the parity baseline. */
-  private[graft] def readV1(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
+  /** The pre-V2 scan: binaryFile + [[decode]] over whole-file bytes
+    * (prunes nothing). Kept as the parity baseline. */
+  private[graft] def readV1(spark: SparkSession, path: String): DataFrame =
+    decodeFiles(spark.read.format("binaryFile")
       .option("pathGlobFilter", "*_prof.nc")
       .option("recursiveFileLookup", "true")
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (p, b) => parseFile(p, b) })
-      .toDF()
-  }
+      .load(path))
 
   /** Incremental re-ingest (SURVEY.md §2.9): the GDAC as a STREAMING file
     * source — Structured Streaming's file tracker discovers newly landed
     * `_prof.nc` files per micro-batch and each is parsed exactly once, so
     * keeping a profiles table current is `argoStream(...).writeStream` in
-    * append mode instead of a full rescan. Identical parse path to
-    * [[read]] (one file per row, executor-side [[Nc3]]).
+    * append mode instead of a full rescan. Same [[decode]] as [[read]]
+    * (one file per row, executor-side [[Nc3]]).
     * @param maxFilesPerTrigger bound files per micro-batch (backfill of a
     *                           large GDAC arrives in steady chunks) */
   def readStream(spark: SparkSession, path: String,
-                 maxFilesPerTrigger: Int = 1000): DataFrame = {
-    import spark.implicits._
-    spark.readStream.format("binaryFile")
+                 maxFilesPerTrigger: Int = 1000): DataFrame =
+    decodeFiles(spark.readStream.format("binaryFile")
       // streaming sources require the schema up front; binaryFile's is fixed
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"))
       .option("pathGlobFilter", "*_prof.nc")
       .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions(_.flatMap { case (p, b) => parseFile(p, b) })
-      .toDF()
+      .load(path))
+
+  /** binaryFile rows (path, content) → every [[ArgoNcV2.Schema]] column. */
+  private def decodeFiles(files: DataFrame): DataFrame = {
+    import files.sparkSession.implicits._
+    // resolved on the driver: the analyzer cannot run inside a task
+    val bound = ArgoNcV2.RowEncoder.resolveAndBind()
+    val columns = ArgoNcV2.Schema.fieldNames.toSeq
+    files.select(col("path"), col("content")).as[(String, Array[Byte])]
+      .mapPartitions { it =>
+        val toRow = bound.createDeserializer()
+        it.flatMap { case (p, b) => decode(p, new Nc3.NcFile(b), columns).map(toRow) }
+      }(ArgoNcV2.RowEncoder)
   }
 
   /** Projection matching [[graft.argo.SummaryBuilder]]'s raw-header input. */

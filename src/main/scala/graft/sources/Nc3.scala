@@ -21,11 +21,12 @@ import java.nio.charset.StandardCharsets
   * Record slabs interleave per record in variable order, each padded to 4
   * bytes except when there is exactly one record variable (the spec's
   * special case) — that is how the Argo `_prof.nc` HISTORY block is laid
-  * out. Reads are in memory (one Argo float file is ~MBs); the in-memory
-  * writer caps one file at 2 GiB, and [[writeStreaming]] lifts that cap
-  * (CDF-2 offsets) by serializing one variable at a time — the atlas sink
-  * streams through it. NetCDF-4/HDF5 is out of scope (the GDAC
-  * distributes classic).
+  * out. Reads parse the header from bytes in memory and take variable data
+  * from a [[Nc3.Source]]: the whole file, or positioned reads on an open
+  * stream. The in-memory writer caps one file at 2 GiB, and
+  * [[writeStreaming]] lifts that cap (CDF-2 offsets) by serializing one
+  * variable at a time — the atlas sink streams through it. NetCDF-4/HDF5
+  * is out of scope (the GDAC distributes classic).
   */
 object Nc3 {
   val NcByte = 1; val NcChar = 2; val NcShort = 3
@@ -64,8 +65,29 @@ object Nc3 {
 
   // ---- reader -------------------------------------------------------------
 
-  final class NcFile(bytes: Array[Byte]) {
-    private val bb = ByteBuffer.wrap(bytes) // big-endian by default
+  /** Where an [[NcFile]]'s variable data comes from: the whole file in
+    * memory ([[ArraySource]]), or positioned reads on an open stream (the
+    * pruned GDAC scan reads only the variables a query needs). */
+  trait Source {
+    /** File length in bytes: resolves the streaming numrecs sentinel. */
+    def length: Long
+    /** The `len` bytes at file offset `pos`, which belong to variable
+      * `name`, as a big-endian buffer positioned at the first of them. */
+    def read(name: String, pos: Long, len: Int): ByteBuffer
+  }
+
+  private final class ArraySource(bytes: Array[Byte]) extends Source {
+    def length: Long = bytes.length.toLong
+    def read(name: String, pos: Long, len: Int): ByteBuffer =
+      ByteBuffer.wrap(bytes, pos.toInt, len)
+  }
+
+  /** A classic file: the header is parsed from `header` (the whole file, or
+    * a prefix that holds the header), variable data is read from `data`. */
+  final class NcFile(header: Array[Byte], data: Source) {
+    def this(bytes: Array[Byte]) = this(bytes, new ArraySource(bytes))
+
+    private val bb = ByteBuffer.wrap(header) // big-endian by default
 
     require(bb.get() == 'C'.toByte && bb.get() == 'D'.toByte &&
       bb.get() == 'F'.toByte, "not a NetCDF classic file (bad magic)")
@@ -161,7 +183,7 @@ object Nc3 {
       else {
         val rv = vars.filter(_.isRecord)
         if (rv.isEmpty || recSize == 0L) 0
-        else ((bytes.length - rv.map(_.begin).min) / recSize).toInt
+        else ((data.length - rv.map(_.begin).min) / recSize).toInt
       }
     // patch the record-dim extent now that the count is resolved
     if (numRecs != numRecsRaw)
@@ -181,15 +203,7 @@ object Nc3 {
       require(v.ncType != NcChar, s"$name is NC_CHAR; use readChars")
       val n = v.shape.foldLeft(1L)(_ * _).toInt
       val out = new Array[Double](n)
-      val db = bb.duplicate().position(v.begin.toInt)
-      var i = 0
-      v.ncType match {
-        case NcByte => while (i < n) { out(i) = db.get(); i += 1 }
-        case NcShort => while (i < n) { out(i) = db.getShort(); i += 1 }
-        case NcInt => while (i < n) { out(i) = db.getInt(); i += 1 }
-        case NcFloat => while (i < n) { out(i) = db.getFloat(); i += 1 }
-        case NcDouble => while (i < n) { out(i) = db.getDouble(); i += 1 }
-      }
+      widen(v, data.read(name, v.begin, n * typeSize(v.ncType)), out, 0, n)
       out
     }
 
@@ -199,8 +213,22 @@ object Nc3 {
       require(v.ncType == NcChar, s"$name is not NC_CHAR")
       val n = v.shape.foldLeft(1L)(_ * _).toInt
       val out = new Array[Byte](n)
-      bb.duplicate().position(v.begin.toInt).get(out)
+      data.read(name, v.begin, n).get(out)
       out
+    }
+
+    /** `n` values of `v`'s numeric type from `src` into `out` at `at`. */
+    private def widen(v: Var, src: ByteBuffer, out: Array[Double],
+                      at: Int, n: Int): Unit = {
+      var i = at
+      val end = at + n
+      v.ncType match {
+        case NcByte => while (i < end) { out(i) = src.get(); i += 1 }
+        case NcShort => while (i < end) { out(i) = src.getShort(); i += 1 }
+        case NcInt => while (i < end) { out(i) = src.getInt(); i += 1 }
+        case NcFloat => while (i < end) { out(i) = src.getFloat(); i += 1 }
+        case NcDouble => while (i < end) { out(i) = src.getDouble(); i += 1 }
+      }
     }
 
     private def fixed(name: String): Var = {
@@ -220,15 +248,8 @@ object Nc3 {
       val out = new Array[Double](numRecs * per)
       var r = 0
       while (r < numRecs) {
-        val db = bb.duplicate().position((v.begin + r * recSize).toInt)
-        var i = 0
-        v.ncType match {
-          case NcByte => while (i < per) { out(r * per + i) = db.get(); i += 1 }
-          case NcShort => while (i < per) { out(r * per + i) = db.getShort(); i += 1 }
-          case NcInt => while (i < per) { out(r * per + i) = db.getInt(); i += 1 }
-          case NcFloat => while (i < per) { out(r * per + i) = db.getFloat(); i += 1 }
-          case NcDouble => while (i < per) { out(r * per + i) = db.getDouble(); i += 1 }
-        }
+        widen(v, data.read(name, v.begin + r * recSize, per * typeSize(v.ncType)),
+          out, r * per, per)
         r += 1
       }
       out
@@ -243,8 +264,7 @@ object Nc3 {
       val out = new Array[Byte](numRecs * per)
       var r = 0
       while (r < numRecs) {
-        bb.duplicate().position((v.begin + r * recSize).toInt)
-          .get(out, r * per, per)
+        data.read(name, v.begin + r * recSize, per).get(out, r * per, per)
         r += 1
       }
       out

@@ -8,9 +8,10 @@ import graft.sources.{ArgoNcV2, ArgoNetCDF, Nc3}
 
 /** The DataSource V2 GDAC scan (`format("argonc")`) against the
   * binaryFile + mapPartitions baseline: identical schema, identical rows
-  * across every variant the parse path distinguishes (adjusted twins
-  * present/absent, float widening, per-profile char vars, record-var
-  * HISTORY block present but unrequested), and — the point of the
+  * across every variant the decode distinguishes (adjusted twins
+  * present/absent, float widening, per-profile char vars), decoded values
+  * checked against the fixture's own arrays, record variables refused
+  * only when a required column needs one, and — the point of the
   * source — a PLAN-LEVEL pin that a header-shaped projection never
   * reads the science grids' bytes. */
 class ArgoNcV2Spec extends SparkSuite {
@@ -18,8 +19,11 @@ class ArgoNcV2Spec extends SparkSuite {
   private val nProf = 4
   private val nLev = 12
 
-  private def prof(wmo: Int, adjusted: Boolean,
-                   withPres: Boolean = true): Array[Byte] = {
+  /** `recordDim` = Some(d): `d` is declared unlimited with nProf records —
+    * "N_HISTORY" carries JULD alone on it, "N_PROF" turns every
+    * per-profile variable into a record variable. */
+  private def prof(wmo: Int, adjusted: Boolean, withPres: Boolean = true,
+                   recordDim: Option[String] = None): Array[Byte] = {
     val pres = Array.tabulate(nProf * nLev)(i => (i % nLev) * 50.0f)
     val temp = pres.map(p => 20.0f - p / 100.0f)
     val psal = pres.map(_ => 35.0f)
@@ -29,7 +33,9 @@ class ArgoNcV2Spec extends SparkSuite {
     def c2(name: String, data: Array[Byte]) =
       Nc3.VarSpec(name, Seq("N_PROF", "N_LEVELS"), Nil, Nc3.NcChar, data)
     val base = Seq(
-      Nc3.VarSpec("JULD", Seq("N_PROF"), Nil, Nc3.NcDouble,
+      Nc3.VarSpec("JULD",
+        Seq(if (recordDim.contains("N_HISTORY")) "N_HISTORY" else "N_PROF"),
+        Nil, Nc3.NcDouble,
         Array.tabulate(nProf)(i => 25567.0 + i * 10.5)),
       Nc3.VarSpec("LONGITUDE", Seq("N_PROF"), Nil, Nc3.NcDouble,
         Array.tabulate(nProf)(i => 10.0 + i)),
@@ -52,11 +58,13 @@ class ArgoNcV2Spec extends SparkSuite {
         f2("PSAL_ADJUSTED", psal.map(_ + 0.25f)),
         c2("PRES_ADJUSTED_QC", qc), c2("TEMP_ADJUSTED_QC", qc),
         c2("PSAL_ADJUSTED_QC", qc)) else Nil)
+    val profDim = Nc3.Dim("N_PROF", if (recordDim.contains("N_PROF")) 0 else nProf)
     Nc3.write(
-      dims = Seq(Nc3.Dim("N_PROF", nProf), Nc3.Dim("N_LEVELS", nLev),
-        Nc3.Dim("STRING8", 8)),
+      dims = recordDim.filter(_ == "N_HISTORY").map(Nc3.Dim(_, 0)).toSeq ++
+        Seq(profDim, Nc3.Dim("N_LEVELS", nLev), Nc3.Dim("STRING8", 8)),
       gatts = Seq(Nc3.Att("title", Nc3.NcChar, "v2 spec fixture")),
-      vars = base)
+      vars = base,
+      numRecs = if (recordDim.isDefined) nProf else 0)
   }
 
   private lazy val gdac: String = {
@@ -90,6 +98,35 @@ class ArgoNcV2Spec extends SparkSuite {
     // both fixture variants really exercised
     assert(a.count(_.getAs[Any]("TEMP_ADJUSTED") == null) == nProf)
     assert(a.count(_.getAs[Any]("TEMP_ADJUSTED") != null) == nProf)
+    // both scans share one decode, so check it against the fixture's own
+    // arrays too
+    val epoch1950 = java.time.Instant.parse("1950-01-01T00:00:00Z")
+    a.foreach { r =>
+      val i = r.getAs[Short]("IPROF").toInt
+      def grid(n: String) = r.getAs[scala.collection.Seq[Double]](n).toSeq
+      val pres = Seq.tabulate(nLev)(k => k * 50.0f)
+      val temp = pres.map(p => 20.0f - p / 100.0f)
+      assert(grid("PRES") == pres.map(_.toDouble))
+      assert(grid("TEMP") == temp.map(_.toDouble))
+      assert(grid("PSAL") == Seq.fill(nLev)(35.0))
+      // QC = product of the three *_QC digits, each 1 + (cell % 3)
+      val qc = Seq.tabulate(nLev)(k => math.pow(1 + (i * nLev + k) % 3, 3))
+      assert(grid("QC") == qc)
+      assert(qc.toSet == Set(1.0, 8.0, 27.0))
+      if (r.getAs[Int]("WMO") == 2901001) {
+        assert(grid("PRES_ADJUSTED") == grid("PRES").map(_ + 1.0))
+        assert(grid("TEMP_ADJUSTED") == grid("TEMP").map(_ + 0.5))
+        assert(grid("PSAL_ADJUSTED") == grid("PSAL").map(_ + 0.25))
+        assert(grid("QC_ADJUSTED") == qc)
+      } else assert(r.getAs[Any]("QC_ADJUSTED") == null)
+      assert(r.getAs[String]("platform_type") == "APEX")
+      assert(r.getAs[String]("data_mode") == "RDAR".substring(i, i + 1))
+      assert(r.getAs[Int]("position_qc") == "1122"(i) - '0')
+      assert(r.getAs[Int]("N_LEVELS") == nLev)
+      assert(r.getAs[Float]("LONGITUDE") == (10.0 + i).toFloat)
+      assert(r.getAs[java.sql.Timestamp]("JULD").toInstant ==
+        epoch1950.plusMillis(math.round((25567.0 + i * 10.5) * 86400000.0)))
+    }
   }
 
   private def witnessed(): Set[String] = {
@@ -158,12 +195,37 @@ class ArgoNcV2Spec extends SparkSuite {
     assert(all.size == 3, s"non-path filter must not prune files: $all")
   }
 
-  test("record fallback >2 GiB guard: actionable failure, not array overflow") {
-    ArgoNcV2.requireJvmReadable(1024L, "small_prof.nc") // no-op
-    ArgoNcV2.requireJvmReadable(Int.MaxValue - 16L, "edge_prof.nc")
-    val e = intercept[UnsupportedOperationException](
-      ArgoNcV2.requireJvmReadable(3L << 30, "/gdac/aoml/big/big_prof.nc"))
-    assert(e.getMessage.contains("big_prof.nc") && e.getMessage.contains("2 GiB"))
+  private def gdacOf(name: String, bytes: Array[Byte]): String = {
+    val root = graft.TempDirs.create(name)
+    val dir = root.resolve("aoml/2901009")
+    Files.createDirectories(dir)
+    Files.write(dir.resolve("2901009_prof.nc"), bytes)
+    root.toString
+  }
+
+  private def causes(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(c => String.valueOf(c.getMessage)).toSeq
+
+  test("a required record variable fails both scans; a projection without one still reads") {
+    val root = gdacOf("gdac-rec-juld",
+      prof(2901009, adjusted = false, recordDim = Some("N_HISTORY")))
+    def refused(df: => org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[Exception](df.collect())
+      assert(causes(e).exists(_.contains("JULD is a record variable")),
+        causes(e).mkString(" <- "))
+    }
+    refused(ArgoNetCDF.read(spark, root))
+    refused(ArgoNetCDF.readV1(spark, root))
+    val rows = ArgoNetCDF.read(spark, root).select("WMO", "PRES").collect()
+    assert(rows.length == nProf && rows.forall(_.getInt(0) == 2901009))
+  }
+
+  test("N_PROF as the record dimension: both scans return 0 rows, silently") {
+    val root = gdacOf("gdac-rec-prof",
+      prof(2901009, adjusted = false, recordDim = Some("N_PROF")))
+    assert(ArgoNetCDF.read(spark, root).count() == 0)
+    assert(ArgoNetCDF.readV1(spark, root).count() == 0)
   }
 
   test("glob paths keep working on the V2 default (binaryFile .load(glob) parity)") {

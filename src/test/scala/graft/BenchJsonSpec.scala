@@ -55,6 +55,13 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(KV("eff", Seq(3.94, 4.0), r1, array = true).json == "\"eff\":[3.9,4.0]")
   }
 
+  test("every deterministic count is a count, so a stage re-run keeps it; seconds are not") {
+    Seq("q36cand", "q43out", "q129rows", "q129scan", "q129scan_app").foreach(k =>
+      assert(isCount(k), k))
+    Seq("q129", "q129_cold", "q71scan", "q97scan", "wall", "q36candsec").foreach(k =>
+      assert(!isCount(k), k))
+  }
+
   test("the full line keeps every key; stdout drops detail keys and clean flags only") {
     val (full, out) = lines(head, Seq(calib, scale10, interp, stores, cores))
     assert(full == """{"metric":"total","value":12.30,"unit":"sec",""" +

@@ -1,5 +1,6 @@
 package graft
 
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Interp
@@ -18,6 +19,32 @@ class InterpSpec extends AnyFunSuite {
     assert(Interp.linear(xs, ys, 0.5) === 2.0)
     assert(Interp.linear(xs, ys, -10.0) === 1.0) // clamp left
     assert(Interp.linear(xs, ys, 100.0) === 4.0) // clamp right
+  }
+
+  test("linearLadder equals linear bit for bit (exact hits, interior, both end clamps)") {
+    val ladder = for {
+      n <- Gen.choose(1, 80)
+      x0 <- Gen.choose(-1e4, 1e4)
+      gaps <- Gen.listOfN(n - 1, Gen.choose(1e-3, 50.0))
+      ys <- Gen.listOfN(n, Gen.choose(-1e6, 1e6))
+    } yield (gaps.scanLeft(x0)(_ + _).toArray, ys.toArray)
+    val prop = Prop.forAll(ladder.suchThat { case (xs, _) =>
+      xs.indices.drop(1).forall(i => xs(i - 1) < xs(i))
+    }) { case (xs, ys) =>
+      val lo = xs.head
+      val hi = xs.last
+      val probes = xs.toSeq ++ Seq(lo - 1.0, lo - 1e9, hi + 1.0, hi + 1e9) ++
+        xs.indices.drop(1).flatMap { i =>
+          val (a, b) = (xs(i - 1), xs(i))
+          Seq(a + (b - a) * 0.5, a + (b - a) * 0.123, b - (b - a) * 1e-7)
+        }
+      probes.forall { t =>
+        java.lang.Double.doubleToLongBits(Interp.linearLadder(xs, ys, t)) ==
+          java.lang.Double.doubleToLongBits(Interp.linear(xs, ys, t))
+      }
+    }
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
+    assert(r.passed, r.status.toString)
   }
 
   test("spline reproduces nodes") {

@@ -4,12 +4,15 @@
 Reads Verify.scala output (<out>/<name>/ parquet + oracle_sql.json), runs
 each oracle in DuckDB over the same sf dir, and compares: schema (column
 names), row count, and exact values with columns sorted by name and rows
-sorted. Dev tooling only — not part of the Spark library.
+sorted. Each result line carries the query's DuckDB oracle seconds, and the
+five slowest oracles are listed before the closing `== N pass, M fail ==`
+line. Dev tooling only — not part of the Spark library.
 
 Usage: python3 tools/check_oracles.py <sfDir> <verifyOutDir>
 """
 import json
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -39,6 +42,7 @@ def main(sf_dir: str, out_dir: str) -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    secs = {}
     for name in sorted(oracles):
         try:
             got = pd.read_parquet(f"{out_dir}/{name}")
@@ -46,32 +50,39 @@ def main(sf_dir: str, out_dir: str) -> int:
             print(f"FAIL {name}: spark output missing ({e})")
             n_fail += 1
             continue
+        t0 = time.perf_counter()
         try:
             want = con.execute(oracles[name]).fetchdf()
         except Exception as e:
             print(f"FAIL {name}: oracle SQL error: {e}")
             n_fail += 1
             continue
+        finally:
+            secs[name] = time.perf_counter() - t0
+        took = f"oracle {secs[name]:.2f} s"
         g, w = canon(got), canon(want)
         if list(g.columns) != list(w.columns):
-            print(f"FAIL {name}: columns {list(g.columns)} != {list(w.columns)}")
+            print(f"FAIL {name}: columns {list(g.columns)} != {list(w.columns)} ({took})")
             n_fail += 1
             continue
         if len(g) != len(w):
-            print(f"FAIL {name}: rows {len(g)} != {len(w)}")
+            print(f"FAIL {name}: rows {len(g)} != {len(w)} ({took})")
             n_fail += 1
             continue
         if not g.equals(w):
             neq = (g != w) & ~(g.isna() & w.isna())
             bad_cols = [c for c in g.columns if neq[c].any()]
-            print(f"FAIL {name}: values differ in {bad_cols}")
+            print(f"FAIL {name}: values differ in {bad_cols} ({took})")
             for c in bad_cols[:2]:
                 i = neq[c].idxmax()
                 print(f"  e.g. row {i} col {c}: spark={g[c][i]!r} duckdb={w[c][i]!r}")
             n_fail += 1
             continue
-        print(f"PASS {name} ({len(g)} rows)")
+        print(f"PASS {name} ({len(g)} rows, {took})")
         n_pass += 1
+    slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:5]
+    print(f"slowest oracles ({sum(secs.values()):.1f} s in all): " +
+          ", ".join(f"{n} {s:.2f} s" for n, s in slowest))
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 
